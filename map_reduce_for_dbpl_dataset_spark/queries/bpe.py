@@ -101,11 +101,20 @@ def _word_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _seq_pieces(seq: F.Column) -> F.Column:
+    """The symbols of a '(s)(s)' seq as a 'pieces' string: 's s'."""
+    return F.replace(
+        F.substring(seq, F.lit(2), F.length(seq) - 2), F.lit(")("), F.lit(" ")
+    )
+
+
+def _n_pieces(seq: F.Column) -> F.Column:
+    return F.size(F.split(_seq_pieces(seq), " "))
+
+
 def _adjacent_pairs(seq_col: str) -> F.Column:
     """array of 'left right' adjacent symbol pairs of a '(s)(s)' seq."""
-    toks = F.split(
-        F.expr(f"substring({seq_col}, 2, length({seq_col}) - 2)"), r"\)\("
-    )
+    toks = F.split(_seq_pieces(F.col(seq_col)), " ")
     n = F.size(toks)
     pairs = F.zip_with(
         F.slice(toks, F.lit(1), n - 1),
@@ -210,15 +219,13 @@ def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scale the same rewrite applied corpus-side is a broadcast-join
     + per-row expression, no shuffle."""
     _, w = _bpe_rounds(spark, sf_dir)
-    pieces = F.replace(
-        F.expr("substring(seq, 2, length(seq) - 2)"), F.lit(")("), F.lit(" ")
-    )
+    seq = F.col("seq")
     return (
         w.select(
             "word",
             "cnt",
-            F.size(F.split(pieces, " ")).alias("n_pieces"),
-            pieces.alias("pieces"),
+            _n_pieces(seq).alias("n_pieces"),
+            _seq_pieces(seq).alias("pieces"),
         )
         .orderBy(F.desc("cnt"), F.asc("word"))
     )
@@ -251,19 +258,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(tokens(F.col("text"))).alias("word")
     ).filter(F.col("word").rlike("^[a-z0-9]+$"))
     # fast path: precomputed piece counts for the trained vocabulary
-    vocab = trained.select(
-        "word",
-        F.size(
-            F.split(
-                F.replace(
-                    F.expr("substring(seq, 2, length(seq) - 2)"),
-                    F.lit(")("),
-                    F.lit(" "),
-                ),
-                " ",
-            )
-        ).alias("_vocab_pieces"),
-    )
+    vocab = trained.select("word", _n_pieces(F.col("seq")).alias("_vocab_pieces"))
     # Piece counts are a function of the word TYPE, so compute them
     # once per distinct type — one partial-agg'd distinct over 8-byte-
     # ish words — and join the (word, n_sym) map back onto the
@@ -300,16 +295,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # when() evaluates the fallback branch only for OOV types
     n_sym = F.when(F.col("_vocab_pieces").isNotNull(), F.col("_vocab_pieces")).otherwise(
-        F.size(
-            F.split(
-                F.replace(
-                    F.substring(seq, F.lit(2), F.length(seq) - 2),
-                    F.lit(")("),
-                    F.lit(" "),
-                ),
-                " ",
-            )
-        )
+        _n_pieces(seq)
     )
     word_sym = t.select("word", n_sym.alias("_n_sym"))
     if n_types <= BPE_BROADCAST_TYPE_CAP:

@@ -32,6 +32,7 @@ from ..functions.text import (
     marker_hits,
     normalize_text,
     tokens,
+    tokens_from_normalized,
     word_shingles,
 )
 from ..operators.dedup import (
@@ -585,11 +586,11 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # normalize + tokenize projected separately so each runs ONCE per
     # row: marker_hits is a higher-order function (CodegenFallback, no
     # codegen CSE), so an inlined `toks` re-ran the regex/split chain
-    # for it on top of the codegen-shared copy (r21 spans pattern;
-    # same-session A/B at sf1: 2.43 -> 2.36 s best-of-5)
+    # for it on top of the codegen-shared copy (same-session A/B at
+    # sf1: 2.43 -> 2.36 s best-of-5)
     t = d.select("doc_id", normalize_text(F.col("text")).alias("_n")).select(
         "doc_id",
-        F.split(F.col("_n"), " ").alias("_t"),
+        tokens_from_normalized(F.col("_n")).alias("_t"),
         F.length("_n").alias("n_chars_norm"),
     )
     d = t.select(

@@ -12,21 +12,14 @@ from map_reduce_for_dbpl_dataset_spark.session import get_spark
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 # The shared test session's shape — single source of truth, imported by
-# tools/cost_ledger.py so COSTS.md is always measured at the shape the
-# suite actually pays for.  Raised 4 -> 16 in round 15 (round-14
-# verdict item 5: full cold suite had plateaued ~24 min, dominated by
-# the sf1 net's Spark side running on 4 of 32 cores): 16 threads cut
-# the three heaviest rows 360 s -> 131 s measured, while staying
-# under the machine's 32 so DuckDB oracle phases and Python UDF
-# workers keep headroom.  Still multi-partition (the property the
-# small session existed to keep honest), and the hash-identity net is
-# partition-count-invariant by construction — certified at
-# cpus/shuffle 4 (suite, rounds 9-14) and 8 (driver gate) already;
-# this adds a third shape rather than weakening anything.
-# The 16 assumes this repo's 32-core grading machine; capped at
-# cpu_count so a smaller dev/CI host doesn't oversubscribe local[16]
-# (round-15 ADVICE — correctness is shape-invariant either way, only
-# the documented cold-suite timings assume the 32-core host).
+# tools/cost_ledger.py so COSTS.md is measured at the shape the suite
+# actually pays for.  On a 32-core host, 16 threads cut the three
+# heaviest sf1 oracle-net rows from 360 s (4 threads) to 131 s while
+# leaving cores for DuckDB oracle phases and Python UDF workers; capped
+# at cpu_count so a smaller host does not oversubscribe.
+# Results do not depend on the value: the hash-identity net is
+# partition-count-invariant by construction, and the session stays
+# multi-partition so that property is exercised.
 SUITE_CPUS = min(16, os.cpu_count() or 16)
 SUITE_SHUFFLE_PARTITIONS = SUITE_CPUS
 

@@ -5,6 +5,18 @@ from __future__ import annotations
 
 import re
 
+import pytest
+from pyspark.sql import functions as F
+
+from map_reduce_for_dbpl_dataset_spark.functions.vectors import (
+    dot_q,
+    norm2_q,
+    quantize,
+)
+from map_reduce_for_dbpl_dataset_spark.operators.similarity import (
+    _narrow_q32,
+    _semdedup_corpus,
+)
 from map_reduce_for_dbpl_dataset_spark.queries.pipeline import (
     LINE_MIN_DF,
     LINE_TOKENS,
@@ -13,6 +25,7 @@ from map_reduce_for_dbpl_dataset_spark.queries.pipeline import (
     q_dedup_incremental,
     q_quality_select,
 )
+from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
 
 def _norm_tokens(text: str) -> list[str]:
@@ -442,3 +455,57 @@ def test_semdedup_matmul_assignment_matches_expression_argmax(spark, sf_dir):
     assert got == ref
     assert len(got) == e.count()
     assert len(set(got.values())) > 1  # non-degenerate codebook
+
+
+# SemDeDup's salted pair stage ships quantized vectors as array<int>
+# to halve the replicated shuffle's row width.  These pin (a) the
+# narrowing is in the pair pipeline's schema, (b) dot_q/norm2_q stay
+# exact over int32 inputs (widen-before-multiply), and (c) the runtime
+# guard refuses a vector that cannot narrow losslessly instead of
+# silently wrapping.
+def test_semdedup_corpus_ships_int32_vectors(spark, sf_dir):
+    e = load_table(spark, sf_dir, "embeddings")
+    c = _semdedup_corpus(e, "vec_id", "embedding", 1000)
+    assert dict(c.dtypes)["_q"] == "array<int>"
+    # and the values equal the unnarrowed quantization exactly
+    wide = e.select(
+        F.col("vec_id").alias("_id"), quantize(F.col("embedding"), 1000).alias("_qw")
+    )
+    diff = (
+        c.join(wide, "_id")
+        .filter(F.col("_q").cast("array<bigint>") != F.col("_qw"))
+        .count()
+    )
+    assert diff == 0
+
+
+def test_dot_norm_exact_over_int32(spark):
+    # elements near the int32 edge: products up to ~4.6e18 must land
+    # exactly in the long accumulator (widen-before-multiply)
+    a = [2_000_000_000, -2_000_000_000, 1, 0]
+    b = [2_000_000_000, 1_999_999_999, -7, 5]
+    df = spark.createDataFrame(
+        [(a, b)], "a array<int>, b array<int>"
+    ).select(dot_q(F.col("a"), F.col("b")).alias("d"), norm2_q(F.col("a")).alias("n"))
+    row = df.collect()[0]
+    assert row["d"] == sum(x * y for x, y in zip(a, b))
+    assert row["n"] == sum(x * x for x in a)
+
+
+def test_narrow_guard_raises_on_oversized_element(spark):
+    big = 3_000_000_000  # exceeds int32; n2 = 9e18 < 2^63 stays exact
+    df = spark.createDataFrame([([big],)], "q array<long>").select(
+        _narrow_q32(F.col("q"), norm2_q(F.col("q"))).alias("q32")
+    )
+    with pytest.raises(Exception, match="int32"):
+        df.collect()
+
+
+def test_narrow_roundtrip_at_int32_edge(spark):
+    # the guard is n2-based and conservative: a SINGLE max-magnitude
+    # element sits exactly on the (2^31-1)^2 boundary and must pass
+    for vals in ([2_147_483_647], [-2_147_483_647], [0, 123, -456]):
+        df = spark.createDataFrame([(vals,)], "q array<long>").select(
+            _narrow_q32(F.col("q"), norm2_q(F.col("q"))).alias("q32")
+        )
+        assert df.collect()[0]["q32"] == vals

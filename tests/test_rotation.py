@@ -1,66 +1,51 @@
-"""Self-check for the re-certification rotation policy
-(queries/__init__.py): the grading driver verifies only the FIRST 50
-registry entries per round, so the ordering must always put the
-weakest correctness signal first.  These invariants make the policy
-self-checking — a forgotten per-round fold of CORRECTNESS_r{N}.json,
-a typo'd query name in the bookkeeping maps, or an ordering bug
-between queries() and oracle_sql() fails fast here instead of
-silently aging green rows (round-4 verdict #7).
-
-No SparkSession needed; this only inspects the registry ordering.
-"""
+"""Each round's differential check covers only the first WINDOW
+``queries()`` entries, so they must be the stalest-green ones in the
+CORRECTNESS ledger."""
 
 from __future__ import annotations
 
-from map_reduce_for_dbpl_dataset_spark import queries as reg
+import json
+from pathlib import Path
 
-# The driver's per-round differential-check window size.
+import __spark_entry__ as entry
+
 WINDOW = 50
+REPO = Path(__file__).resolve().parents[1]
 
 
-def test_bookkeeping_names_are_real_queries():
-    names = set(reg.all_queries())
-    # A fold that keeps a renamed/deleted query, or records a typo,
-    # would silently distort the rotation — every bookkeeping name
-    # must be a registered query.
-    assert set(reg._LAST_CHECKED) <= names
-    assert set(reg._CHANGED) <= names
+def _green_round(ledger: Path) -> dict[str, int]:
+    """name -> round of its latest CORRECTNESS row if green, else 0."""
+    out: dict[str, int] = {}
+    files = ledger.glob("CORRECTNESS_r*.json")
+    for rnd, p in sorted((int(p.stem.rsplit("_r", 1)[1]), p) for p in files):
+        for name, row in json.loads(p.read_text()).items():
+            ok = row["rows_match"] and row["schema_match"] and row["hash_match"]
+            out[name] = rnd if ok else 0
+    return out
 
 
 def test_window_prioritizes_weakest_signal():
-    names = list(reg.all_queries())
-    assert len(names) == len(set(names))
-    lc, changed = reg._LAST_CHECKED, set(reg._CHANGED)
-    window = set(names[:WINDOW])
-
-    # Tier 1: never-driver-checked queries all make the window
-    # (unless there are somehow more than WINDOW of them).
-    never = [n for n in names if n not in lc]
-    if len(never) <= WINDOW:
-        assert set(never) <= window
-
-    # Tier 2: materially-changed queries re-enter the window.
-    if len(never) + len(changed) <= WINDOW:
-        assert changed <= window
-
-    # Tier 3: staleness is monotone across the window boundary — no
-    # excluded row may be staler than an included one.
-    inside = [lc[n] for n in names[:WINDOW] if n in lc and n not in changed]
-    outside = [lc[n] for n in names[WINDOW:] if n in lc and n not in changed]
-    if inside and outside:
-        assert max(inside) <= min(outside)
-
-    # The stalest tier is refreshed wholesale when it fits.
-    if lc:
-        stalest = min(lc.values())
-        stale_rows = [n for n in lc if lc[n] == stalest and n not in changed]
-        if len(never) + len(changed) + len(stale_rows) <= WINDOW:
-            assert set(stale_rows) <= window
+    rnd = _green_round(REPO)
+    key = [rnd.get(n, 0) for n in entry.queries()]
+    assert sorted(key[:WINDOW]) == sorted(key)[:WINDOW]
 
 
 def test_queries_and_oracles_share_one_order():
-    # The driver zips queries() with oracle_sql() positionally when
-    # selecting its window; the two surfaces must agree exactly.
-    q = list(reg.all_queries())
-    o = list(reg.all_oracle_sql())
-    assert [n for n in q if n in set(o)] == o
+    o = list(entry.oracle_sql())
+    assert [n for n in entry.queries() if n in set(o)] == o
+
+
+def test_no_ledger_falls_back_to_name_order(monkeypatch, tmp_path):
+    monkeypatch.setattr(entry, "LEDGER_DIR", str(tmp_path))
+    assert list(entry.queries()) == sorted(entry.queries())
+
+
+def test_red_latest_row_sorts_first(monkeypatch, tmp_path):
+    names = sorted(entry.queries())
+    green = dict.fromkeys(("rows_match", "schema_match", "hash_match"), True)
+    red = {**green, "hash_match": False}
+    r1, r2 = dict.fromkeys(names, green), {names[-1]: red, names[0]: green}
+    for rnd, rows in ((1, r1), (2, r2)):
+        (tmp_path / f"CORRECTNESS_r{rnd}.json").write_text(json.dumps(rows))
+    monkeypatch.setattr(entry, "LEDGER_DIR", str(tmp_path))
+    assert list(entry.queries()) == [names[-1], *names[1:-1], names[0]]

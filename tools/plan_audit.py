@@ -4,8 +4,9 @@ For each audited query, render the formatted physical plan and check
 the properties that decide 100 TB behavior — filters reaching the
 scan, small sides broadcast, per-group top-k limited before exchange,
 global top-k as TakeOrderedAndProject, partial aggregation present,
-no cartesian products. Writes PLANS.md with a summary table and the
-full plans, and exits non-zero if any required property is missing.
+no cartesian products. ``--write`` puts the property table in PLANS.md
+(committed) and the full plans in plans/PLANS_full.md (not committed).
+Exits non-zero if any required property is missing.
 
 Usage: python tools/plan_audit.py [--sf DIR] [--write]
 """
@@ -14,8 +15,10 @@ from __future__ import annotations
 
 import argparse
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 # (query, [(property, substring-that-must-appear), ...])
 CHECKS: dict[str, list[tuple[str, str]]] = {
@@ -820,7 +823,7 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
 }
 
 # Hand-written analysis that survives regeneration: emitted verbatim
-# under the matching query's section in PLANS.md.
+# under the matching query's section in plans/PLANS_full.md.
 NOTES: dict[str, str] = {
     "llm_bpe_encode": """\
 **Round-5 tokenizer family** (queries/bpe.py). Training never
@@ -1220,11 +1223,13 @@ CUSTOM_CHECKS: dict = {
             ("vectorized Arrow matmul assignment", "MapInPandas"),
             ("corpus never shuffles to assign", "!Exchange"),
             ("no cartesian", "!CartesianProduct"),
-            # round-22: pair-stage vectors ship as array<int> (the
-            # salted join replicates them PAIR_SALT+1x; the narrow +
-            # its n2 guard live in _narrow_q32 with the exactness
-            # bound documented there)
-            ("pair vectors narrowed to int32", "as int)"),
+            # pair-stage vectors ship as array<int> (the salted join
+            # replicates them PAIR_SALT+1x; the narrow + its n2 guard
+            # live in _narrow_q32 with the exactness bound documented
+            # there).  The needle is _narrow_q32's element-wise cast
+            # of its lambda variable: a bare cast-to-int suffix also
+            # matches unrelated casts such as the pair salt.
+            ("pair vectors narrowed to int32", "as int), lambda x_"),
         ],
     ),
 }
@@ -1441,17 +1446,17 @@ def audit(sf_dir: str, write: bool) -> int:
     spark.stop()
 
     if write:
-        with open("/root/repo/PLANS.md", "w") as f:
-            f.write(
-                "# PLANS — physical-plan audit\n\n"
-                "Generated by `python tools/plan_audit.py --write` at sf dir "
-                f"`{sf_dir}`.\nEach property is one that decides behavior at "
-                "100 TB; the audit fails CI-style if a property regresses.\n\n"
-                "| query | property | ok |\n|---|---|---|\n"
-                + "\n".join(rows)
-                + "\n\n"
-                + "\n".join(sections)
-            )
+        (REPO / "PLANS.md").write_text(
+            "# PLANS — physical-plan audit\n\n"
+            "Generated by `python tools/plan_audit.py --write` at sf dir "
+            f"`{sf_dir}`.\nEach property is one that decides behavior at "
+            "100 TB; the audit fails CI-style if a property regresses.\n"
+            "The same run writes the full plans to `plans/PLANS_full.md`.\n\n"
+            "| query | property | ok |\n|---|---|---|\n" + "\n".join(rows) + "\n"
+        )
+        (REPO / "plans" / "PLANS_full.md").write_text(
+            "# PLANS — full physical plans\n\n" + "\n".join(sections)
+        )
     print("\n".join(rows))
     if failures:
         print("\nFAILURES:")
