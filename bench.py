@@ -1,369 +1,41 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Headline benchmark: time the HEADLINE queries and print one JSON line.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-   "calibration_sec": C, "value_per_calibration": N/C}
+Each query runs on local[$SPARK_GRAFT_CPUS] into the noop sink (full
+execution, no driver-side collect) $SPARK_GRAFT_BENCH_RUNS times (default
+2), each time on a fresh DataFrame; its slot is the best run in seconds.
+A warm-up pass first pays JVM start, codegen and parquet footer reads.
+The suite runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) and
+again at the ~10x key-shift-replicated set in $SPARK_GRAFT_SCALE_DIR
+(default fixtures/sf1, built by tools/make_scale_fixtures.py on first
+use). $SPARK_GRAFT_SKIP_SCALE=1 skips the build and the second pass.
 
-"calibration_sec" times a fixed synthetic shuffle+agg (spark.range
-5e7 -> groupBy 10k keys) whose code never changes round-to-round:
-movement in it is machine drift, so value_per_calibration is the
-number to compare across rounds.
+JSON keys:
+  metric, value, unit    "headline_total", the sum of `queries`, "sec"
+  queries                {name: best seconds} at $SPARK_GRAFT_SF_DIR
+  sf                     scale factor parsed from the directory name
+  calibration_sec        a fixed synthetic shuffle + aggregate (50M rows,
+                         10k keys) that reads no input and no repo code
+  value_per_calibration  value / calibration_sec
+  bigram_floor_sec       bare tokenize + bigram explode + count over
+                         documents: the text-scan floor under
+                         llm_bigram_lm_score (that query is scan-bound
+                         once it sits within ~2x of this floor)
+  calibration_scan_sec   a fixed projection + aggregate over lineitem,
+                         timed after the suite
+  bench_runs             runs per slot
+  queries_sf1, value_sf1, bigram_floor_sec_sf1, calibration_scan_sec_sf1,
+  sf1_lineitem_rows, bench_runs_scale
+                         the same at the scale point; all present or none
+                         (a failure there keeps the primary keys only)
 
-Each query is materialized with the noop sink (full execution, no
-driver-side collect — the fair way to time a distributed plan).
-
-Second scale point (round-3 verdict #4): if the ~10x key-shift-
-replicated fixture set exists (fixtures/sf1, built by
-tools/make_scale_fixtures.py; override with $SPARK_GRAFT_SCALE_DIR),
-the headline suite also runs once there and the JSON line gains
-"queries_sf1" / "value_sf1" / "sf1_lineitem_rows" — the empirical
-scaling curve alongside the sf0.1 numbers.
-
-"bigram_floor_sec" (and "_sf1") times the bare tokenize + bigram
-explode + count over the documents table — the irreducible text-scan
-cost under llm_bigram_lm_score.  The scoring query is done optimizing
-when it sits within ~2x of this floor (it is text-scan-bound there);
-compare the query's slot to the floor before chasing its absolute
-number.
-
-MEASURED NOISE FLOOR (rounds 6 -> 7 ran byte-identical execution
-code, making BENCH_r06 vs BENCH_r07 a controlled environment-noise
-experiment): headline totals move +/-4-5% and individual sub-second
-slots up to +/-20-25% between runs with zero plan change, even after
-calibration normalization.  Four plan-identical observations of the
-normalized 19-slot total since: 37.8 (r7) -> 31.3 (r8) -> 34.8
-(in-round r9) -> ~36.8 (driver r9 BENCH_r09, after subtracting the
-two slots first added that round) with no execution-code change, so
-value_per_calibration itself carries environment noise the
-calibration slot does not capture (page-cache / co-tenancy effects
-scale differently for the synthetic shuffle than for
-parquet-scan-heavy queries).  Judge the band against the ROLLING
-MEAN of the recent plan-identical runs (~35), not the previous
-round: +/-10% of that mean covers every observation (31.3-38.1),
-while two single runs on identical plans have differed by as much
-as ~17-21% (37.8 -> 31.3).  A new total within +/-10% of the
-recent-rounds mean is noise — do not chase it in either direction;
-only investigate a delta that leaves that band, reading
-calibration_sec first to separate gross machine drift from plan
-drift.
-
-ATTRIBUTION RULE (which calibration slot explains which query —
-rounds 10 -> 11 ran byte-identical execution code and the two slots
-moved in OPPOSITE directions: shuffle calibration_sec 0.608 -> 0.721,
-+18.6%, while calibration_scan_sec fell 0.243 -> 0.205 sf0.1 /
-0.383 -> 0.341 sf1, about -15%): normalize shuffle/agg/join-dominated
-slots (most of the headline — the tpch aggregates, window queries,
-pair-join dedup stages) by calibration_sec, and scan-dominated slots
-(llm_bigram_lm_score and its floor, llm_text_stats, anything whose
-audit profile is a narrow map over documents/lineitem) by
-calibration_scan_sec.  When the two calibrations diverge, expect the
-per-slot deltas to SPLIT the same way — r11's +26-30% rises were all
-shuffle-shaped slots tracking the +19% shuffle drift while scan
-slots fell with the scan yardstick — and read a headline delta as
-environmental iff each slot's move tracks its own shape's yardstick;
-a slot moving AGAINST its shape's calibration (or far beyond it) on
-an unchanged plan is the real-regression signal worth investigating.
-
-R12 SWING DISAMBIGUATED (round-12 verdict item 3; the r13 in-round
-plan-identical run decided it): the r12 sf1 elevation did NOT sustain
-— bigram_floor_sec_sf1 read 3.78 (r10) / 3.77 (r11) / 4.52 (r12) /
-3.54 (r13 in-round) / 4.02 (r13 driver), and the CPU-bound text/pair
-slots that rose with the floor in r12 all came back in the in-round
-control (winnow -10%, bpe_encode -18%, semdedup_k32 -13%,
-jaccard_prefix -12%; sf1 total 96.6 -> 90.9 s) — so r12 was
-environment, the r8 precedent in the adverse direction.
-
-SF1-SPECIFIC NOISE BAND (round-13 verdict item 2 — the driver's
-official BENCH_r13, recorded ~50 min after the in-round control on a
-byte-identical plan, landed at sf1 total 105.9 s / floor 4.024 with
-dblp_coauthor_components_star at 8.71 s, 2.05x its r10-r12 band of
-3.68-4.58 s, tpch_window_ntile ~2x its 1.04-1.15 band,
-semdedup_trained_k32 +44%, bigram_lm_score +22% — all on FLAT
-calibrations, shuffle 0.749 vs r12's 0.745 and scan_sf1 0.378 vs
-r10's 0.383): the ten plan-identical sf1 totals now read
-87.5 / 82.6 / 96.6 / 90.9 / 105.9 / 92.8 / 86.1 / 85.3 / 88.7 /
-92.1 — spread -9%/+17% around the ~90.8 s mean, with single
-iterative/checkpoint-heavy (components_star) and windowed-global-sort
-(ntile) slots swinging up to ~2x (+/-100%).  The sixth observation
-(round-14 in-round, same plans) landed on the mean with
-components_star 4.27 and ntile 1.04 both back in their bands; the
-seventh (the driver's official BENCH_r14, recorded after the final
-round-14 commit: sf1 total 86.14, floor_sf1 3.683, components_star
-3.73 and ntile 1.09 both in-band) confirms it — two consecutive
-post-outlier runs corroborate that the r13 driver run was an
-environmental outlier, not a drift onset.  The eighth (round-15
-in-round: 85.3, components_star 3.98 / ntile 1.08 / winnow 27.3
-in-band) and ninth (the driver's official BENCH_r15: 88.70, floor_sf1
-4.325, components_star 4.03 / ntile 1.19 / winnow 28.49 all in-band)
-sit inside the band as well, as do the tenth (round-16 in-round
-control: 92.1, components_star 4.58 / ntile 1.12 / winnow 29.6) and
-the eleventh (the driver's official BENCH_r16: 91.03, floor_sf1
-4.158, components_star 3.64 / ntile 1.18 in-band, winnow 30.22 — see
-the named watch below), twelfth (round-17 in-round control: 87.0,
-floor_sf1 4.013, components_star 3.75 / ntile 1.06 / winnow 29.68),
-and thirteenth (the driver's official BENCH_r17: 87.46, floor_sf1
-4.112, components_star 4.00 / ntile 1.11 in-band, winnow 26.54 — the
-watch resolution below), and fourteenth (round-18 in-round control 3
-— the clean post-disturbance run, see the ROUND-18 paragraph below:
-89.27, floor_sf1 4.399, components_star 4.06 / ntile 1.25 / winnow
-27.92 all in-band); the fifteenth is the driver's official BENCH_r18
-(99.698, floor_sf1 4.046 — the winnow 31.64 reading adjudicated in
-the ROUND-19 paragraph below) and the sixteenth through eighteenth
-are the three round-19 in-round controls (91.04 / 97.88 / 87.09,
-floors_sf1 3.802 / 3.973 / 3.976 all valid, winnow 29.23 / 29.23 /
-27.30 all in-band); the nineteenth is the driver's official
-BENCH_r19 (95.702, floor_sf1 3.621 — a new low edge of the
-historical floor range, still inside the ~3.5-4.6 validity rule —
-scan_sf1 0.415, a new high edge of the historical scan range, see
-the ROUND-20 paragraph below; winnow 31.312 inside its restated
-25.8-31.7 band, closing the round-18 winnow watch benign) and the
-twentieth the round-20 in-round control (91.66, floor_sf1 3.664,
-scan_sf1 0.339, components_star 4.12 / ntile 1.16 / winnow 28.51
-all in-band); the twenty plan-identical sf1 totals now read
-87.5 / 82.6 / 96.6 / 90.9 / 105.9 / 92.8 / 86.1 / 85.3 / 88.7 /
-92.1 / 91.0 / 87.0 / 87.5 / 89.3 / 99.7 / 91.0 / 97.9 / 87.1 /
-95.7 / 91.7 (82.6-105.9, ~91.3 mean, -10%/+16% outward-rounded),
-and the plans are still byte-identical (the round-15/16/17/18/19/20
-changes touched tests, tools, the registry ledger, and this
-docstring only, not bench.py's own sessions).
-
-ROUND-18 IN-ROUND CONTROLS — DISTURBED-MACHINE, NOT FOLDED (two
-back-to-back controls on byte-identical plans read mutually
-inconsistent eruptions: control 1 sf0.1 raw 39.02 in-envelope but
-sf1 total 116.97 above the band ceiling; control 2 sf1 104.94 back
-in-band but sf0.1 raw 64.09 far out of the raw envelope, with the
-elevation confined to the FIRST 13 suite slots — minhash_lsh 2.0 ->
-10.3 s, pricing_summary 1.0 -> 3.9 s — while the LAST 8 slots all
-read normal, a time-windowed external burst sweeping through
-mid-run).  The code-free yardsticks prove the disturbance: both
-controls' bigram_floor_sec_sf1 (4.598 / 4.974) and
-calibration_scan_sec_sf1 (0.407 / 0.472) sit outside the ENTIRE
-r10-r18 driver history (floors 3.683-4.52, scans 0.339-0.386).
-SF1 FLOOR-VALIDITY RULE (the sf0.1 validity caveat extended to sf1,
-from these two defining observations): when a run's floor_sf1 lands
-outside ~3.5-4.6 (the historical floor range, outward-rounded), the
-machine is measurably disturbed at the text-scan working set and
-that run's sf1 totals/slots are NOT band-comparable — do not fold
-them; judge scaling by the probe instead.  Applied here: winnow's
-sf1 slot read 34.4 / 36.1 in the two controls (above its restated
-25.8-30.3 band, sf0.1 twin DOWN both times at 5.40 / 5.43 vs the
-r17 driver 5.573), which met the committed scale-probe re-run
-cadence's condition (b), so the probe was re-run the same session
-(fourth same-methodology replicate, tools/scale_probe.py): winnow
-exponent 0.77 — EXACTLY its banked r14 value, rows identical
-(38,933 -> 3,493), spans 0.67 / k32 1.34 / scaled 0.57 all inside
-their spreads and under their red lines.  The pair disciplines are
-intact; the two controls' absolute elevations are environmental by
-both the yardstick evidence and the measured exponents.  A THIRD
-control run after the probe came back fully clean — sf0.1 raw 37.55
-/ normalized 51.01 both mid-envelope with calib 0.736 in the
-validity range, sf1 total 89.27 mid-band with floor_sf1 4.399 and
-scan_sf1 0.377 back inside their historical ranges, and winnow
-27.92 back inside its restated 25.8-30.3 band — confirming the
-burst was transient; that third run IS fold-eligible and is the
-fourteenth observation in the band table above.
-
-ROUND-19 WINNOW ADJUDICATION (the round-18 verdict's one watch item:
-the driver's BENCH_r18 read the winnow sf1 slot at 31.641, ~4% above
-its restated 25.8-30.3 band, on an otherwise unremarkable run — sf1
-total 99.698 in-band, floor_sf1 4.046 valid, sf0.1 twin 5.532 flat
-vs r17's 5.573): three round-19 in-round controls on byte-identical
-plans (the round-19 package diff is the rotation-ledger fold +
-comments only) read the slot at 29.230 / 29.226 / 27.298 — all
-inside the old band, with valid floors (3.802 / 3.973 / 3.976) and
-the sf0.1 twin flat-to-down (5.514 / 5.081 / 5.073).  The 31.64 did
-not repeat: per the verdict's fold-and-widen instruction the slot
-band is restated outward from the full non-r12 driver history
-r9-r18 (30.107 / 26.632 / 25.838 / 27.797 / 28.209 / 28.492 /
-30.22 / 26.542 / 31.641) to 25.8-31.7, and the slot stays under the
-standing two-part sf1 attribution rule with no special trigger.
-The scale probe did NOT re-run: its committed cadence condition (b)
-requires an out-of-band move, and every round-19 winnow reading sat
-inside the band.  Round-19 control context (same shape as round 18,
-milder): control 1's sf0.1 raw read 43.41 (above the raw envelope)
-with calib 0.567 below validity and a broad +10-30% mid-suite lift —
-attributed to measured residual load (5-min load average ~6 from
-correctness jobs that finished just before the run; the suite-start
-yardsticks were already quiet, the burst-clause evasion pattern);
-control 2's raw read 39.70 IN-envelope but with calib 1.007 above
-validity and the lift moved to the FIRST four slots (+38-74%) while
-the back half read flat-to-down — the non-reproducing slot pattern
-across two runs on identical plans that marks environment; control
-3 was fully clean (raw 33.64 mid-envelope, calib 0.619 in-validity,
-normalized 54.34 in-envelope, zero slots >+20% vs the r18 driver,
-sf1 87.09 mid-band) — confirming transience, the r18 three-control
-precedent repeated.  All three controls' sf1 passes had valid floors
-and are folded as observations 16-18 above.
-
-ROUND-20 ADJUDICATION OF THE BENCH_r19 NORMALIZED EXCEEDANCE (the
-round-19 verdict's one watch item: the driver's BENCH_r19 read
-value_per_calibration 59.67, above the then-written 46.7-55.7
-normalized envelope, on an otherwise in-budget run — raw 39.561
-inside the raw envelope, calib 0.663 inside the 0.60-0.80 validity
-range but DOWN -17% vs r18's 0.797 while the suite rose +6%, so
-about two-thirds of the exceedance was denominator motion; the
-remaining lift was broad and mild, eight slots 5-10% above their
-r10-r18 driver maxima SIMULTANEOUSLY — revenue_by_nation 2.508,
-pricing_summary 1.377, top3 0.548, dblp_q2 0.888, bpe_encode 3.809
-among them — the r15 co-tenancy signature on byte-identical plans):
-the round-20 settled in-round control (run first thing in the round
-on a quiet machine, 1-min load 0.00, before any other Spark work —
-the round-19 settle-gap lesson applied) read raw 37.88 mid-envelope
-with calib 0.438 BELOW the validity range (the quiet-machine
-denominator artifact; normalized 86.5 judged raw per the caveat),
-scan 0.276 / floor 0.676 at historical values, and EVERY one of the
-eight elevated slots back at or below its historical band
-(revenue_by_nation 1.560, pricing_summary 0.887, top3 0.358,
-dblp_q2 0.603, bpe_encode 3.493 — moves of -8% to -38% vs the r19
-driver), with the only rises (+10-18%) confined to the
-iterative/window/semdedup shapes whose committed slot noise is
-wider than that; the control's sf1 pass landed mid-band (91.66,
-floor_sf1 3.664 valid, scan_sf1 0.339, winnow 28.511 in-band).
-The lift did not repeat on byte-identical plans: the exceedance is
-ENVIRONMENT-ATTRIBUTED per the two-part rule, BENCH_r19 is folded,
-and the normalized envelope is restated OUTWARD per the committed
-discipline to 46.7-59.7 (driver rounds 10-19, the defining 59.67
-inside its own envelope); scan_sf1's recorded historical range
-extends to 0.339-0.415 and floor_sf1's historical low edge to
-3.621, both within the unchanged ~3.5-4.6 floor-validity rule.
-
-LLM_WINNOW_PAIRS SF1 CREEP-WATCH (named in the round-16 verdict,
-wrinkle 2): three consecutive ascending readings on the suite's most
-expensive slot — 28.49 (r15 driver) -> 29.6 (r16 in-round) -> 30.22
-(r16 driver) — against its prior non-elevated driver band
-26.6-28.5 (the lone higher reading, 32.1, was the r12 round-wide
-environmental elevation, floor_sf1 4.52), while the text floor FELL
-(4.325 -> 4.158) and the slot's own sf0.1 twin fell -6.9%
-simultaneously.  The committed sf1 rule correctly reads each single
-observation as environmental (in the 2x single-slot band, opposite
-direction at sf0.1), but a monotone three-run ascent earns a named
-trigger: if the round-17 in-round control or driver reading ascends
-AGAIN (> ~30.2), treat it as the "out-of-band bench move" that
-re-runs the scale probe per the committed cadence
-(tools/scale_probe.py:90-96 — re-measure the winnow 10x->30x
-exponent and compare to its 0.77 bank / ~1.4 red line); if it lands
-back <= ~29, fold it as plain band width and note the resolution
-here.  ROUND-17 FIRST POST-WATCH OBSERVATION: the in-round control
-read 29.68 — the monotone ascent BROKE (below the r16 driver's
-30.22, with the sf1 total 87.0 / floor 4.013 both down and the
-sf0.1 winnow slot 5.075 also below its r16 driver 5.173), so the
-scale-probe trigger did not fire; 29.68 was neither a fresh ascent
-nor fully back under the old ~29 line, so the watch stayed armed for
-the round-17 driver reading.  ROUND-17 RESOLUTION (recorded per this
-watch's own "note the resolution here" clause, from the driver
-artifact BENCH_r17): the round-17 driver reading landed at 26.542 —
-decisively below the prior ~29 line AND below the watch's own 26.6
-band floor, the slot's lowest reading since r11, with the slot's
-suite context unremarkable
-(sf1 total 87.46 mid-band, floor_sf1 4.112 in-band).  The three-run
-ascent is broken in the benign direction; the probe trigger is moot.
-The watch is DISARMED: the slot band is restated outward to
-25.8-30.3, computed from the FULL non-r12 driver history rather
-than the watch's own narrower r10/r13-r15 window (driver readings
-r9-r17 excluding the r12 round-wide elevation: 30.107 / 26.632 /
-25.838 / 27.797 / 28.209 / 28.492 / 30.22 / 26.542 — the r11 floor
-25.838 already sat below the watch's quoted 26.6, so the 26.542
-"new minimum" is a new minimum only of the r13+ era; outward
-rounding so every defining observation sits inside), and the slot
-returns to the standing sf1 two-part attribution rule above
-(investigate only if it leaves the multi-round band AND its sf0.1
-twin moves the same direction) with no special trigger.
-Note these observations are all ALREADY best-of-2 per slot
-(SPARK_GRAFT_BENCH_RUNS defaults to 2 and the sf1 pass inherits it
-via SPARK_GRAFT_BENCH_RUNS_SCALE; the emitted "bench_runs" /
-"bench_runs_scale" keys record the counts actually used), so adding
-runs does not close the band — co-tenancy at the sf1 memory/spill
-working-set size hits both executions of a slot alike.  ATTRIBUTION
-RULE CAVEAT AT SF1: the rule below ("a slot moving far beyond its
-shape's yardstick on an unchanged plan is the real-regression
-signal") FALSE-ALARMS at sf1 for the iterative/window shapes — both
-calibrations stayed flat while components_star doubled on a provably
-unchanged plan.  At sf1, judge a slot against the MULTI-ROUND
-plan-identical band above (total +/-12%, single iterative/window
-slots up to 2x), not against the previous round or the calibration
-slots alone; only investigate an sf1 slot that (a) leaves its
-multi-round band AND (b) moves the same direction in the sf0.1 suite,
-judged against the SF0.1 multi-round envelope below.
-
-SF0.1 MULTI-ROUND ENVELOPE (round-15 verdict item 3 — the r6-r11
-"+/-10% normalized vs the previous round" rule FALSE-ALARMS on
-uniform co-tenancy: the driver's official BENCH_r15 landed at
-value_per_calibration 53.69, +11.4% over BENCH_r14's 48.17, on
-byte-identical plans — 14 of 21 slots sat 2-10% above their
-five-round maxima SIMULTANEOUSLY while BOTH calibration yardsticks
-were also at their maxima, shuffle 0.759 = r9's max and scan 0.281 =
-all-time max, the signature of machine-wide co-tenancy during the
-run, not plan drift): judge the sf0.1 headline against the
-MULTI-ROUND fixed-21-slot-suite envelope, normalized totals
-53.6 / 48.8 / 51.7 / 51.4 / 48.2 / 53.7 / 55.7 / 49.2 / 46.7 / 59.7
-across rounds 10-19 (46.7-59.7, ~51.9 mean, about -10%/+15%; bounds
-rounded OUTWARD so the defining observations sit inside their own
-envelope — r14 read 48.173, r18 read 46.715 below the
-previously-written 48.1 floor, and r19 read 59.67 above the
-previously-written 55.7 ceiling, adjudicated environmental in the
-ROUND-20 paragraph above), with the same two-part
-attribution rule as sf1: investigate only a normalized total that
-(a) leaves the envelope AND (b) cannot be attributed to the
-yardsticks — both calibrations flat (or moving the other way) while
-slots rise is the real-regression signal; a uniform lift with the
-yardsticks at extremes is co-tenancy, run an in-round control and
-fold the observation instead of chasing it.  DENOMINATOR CLAUSE
-(round-16 verdict wrinkle 1 — the envelope's first driver
-application landed OUTSIDE the then-written 48.2-53.7 range at
-normalized 55.65 with calib 0.657 squarely in the validity range,
-even though the raw total 36.57 was mid-raw-envelope and ALL 21
-slots fell or held vs their r15 readings, largest move -24%, no
-rises: pure denominator motion, the shuffle calib fell -13% faster
-than the suite): a normalized exceedance with (a) the raw total
-inside the raw envelope AND (b) no slot above its prior driver
-reading is ATTRIBUTABLE — denominator motion, fold it, do not
-investigate; only a normalized exceedance where slots actually rose
-against flat-or-falling yardsticks is a signal.  VALIDITY CAVEAT:
-the normalized envelope only applies while calibration_sec itself
-sits in its driver-run range (0.60-0.80 across r10-r19; outward
-rounding again — r10 read 0.608 and r17 read 0.799, the first
-driver reading above the previously-written 0.76 edge, so driver
-runs CAN exceed an inward-folded range and the range widens OUTWARD
-like every other envelope here) — on a quiet machine the
-synthetic-shuffle slot can halve (in-round controls have read
-0.46-0.47), exploding value_per_calibration with no query movement
-at all; outside that calib range judge the RAW total against the
-driver-run raw envelope (32.5-40.8 s across r10-r19, ~37.3 mean;
-r10 read 32.597, r15 read 40.75, r19 read 39.561) plus slot-level
-moves.  The
-caveat's first driver-run application was BENCH_r17 (calib 0.799,
-just past the then-written 0.60-0.76): judged raw per the caveat,
-the total 39.29 sat inside the raw envelope, with the textbook
-co-tenancy signature — both yardsticks at extremes simultaneously
-(shuffle 0.799 a driver-run max, scan 0.298 above the prior
-all-time max 0.281), a uniform slot lift, and normalized 49.17
-inside the normalized envelope anyway.  BURST CLAUSE (from round-18
-in-round control 2, the defining observation): the calibration
-slots run at the START of the suite, so a co-tenant burst arriving
-MID-RUN evades every yardstick-based caveat — control 2 read raw
-64.09 s (far outside the raw envelope) with calib 0.767, scan
-0.263, and floor 0.633 all at historical values, because the
-elevation was confined to a CONTIGUOUS run of slots (the first 13:
-minhash_lsh 2.0 -> 10.3 s, pricing_summary 1.0 -> 3.9 s) while the
-last 8 slots all read normal on the byte-identical plan.  A raw/
-normalized exceedance whose per-slot deltas are strongly
-non-uniform in suite ORDER — a contiguous block at 2-5x its
-historical value, the remainder at historical values — is the
-time-windowed burst signature: re-run a control instead of
-investigating (the round-18 third control landed mid-envelope on
-every yardstick, confirming transience); only a UNIFORM slot lift
-that survives a quiet-machine control indicts the plans.  The round-16 in-round control confirmed the
-r15 elevation did not sustain: raw 35.29 s (mid-envelope; normalized
-74.9 solely because calib read 0.471), every slot at or below its
-r15 driver reading (largest move dblp_q5 -31%, largest rise +7%),
-and the sf1 pass landed in-band too (92.14 s total, floor 3.939,
-components_star 4.58 / ntile 1.12 / winnow 29.6).  The round-17
-in-round control read the same quiet-machine signature: raw 34.33 s
-mid-raw-envelope with calib 0.469 below the validity range
-(normalized 73.2 is the denominator artifact again), slot moves vs
-the r16 driver all inside sub-second noise (largest rise dblp_q2
-+16% on a 0.66 s slot), sf1 in-band per the table above.
+Comparing runs: the calibration slots run code that never changes, so
+they measure the machine. Divide shuffle-, join- and aggregate-shaped
+slots (and the total) by calibration_sec, and scan-shaped slots
+(llm_text_stats, llm_bigram_lm_score and its floor) by
+calibration_scan_sec. Never compare absolute times across machines.
+Sub-second slots move by tens of percent between runs of the same code,
+and a co-tenant burst can lift a contiguous block of slots: compare
+medians over several runs, not one run against another.
 """
 
 from __future__ import annotations
@@ -372,6 +44,7 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -386,56 +59,61 @@ HEADLINE = [
     "tpch_asof_latest_order",
     "tpch_events_session",
     "llm_dedup_minhash_lsh",
-    # prefix-filtered PPJoin plan — the one you'd run at 100 TB; the
-    # intentionally-quadratic exact twin (llm_ngram_jaccard) stays
-    # registered as its oracle proof but no longer holds the headline
-    # timing slot (round-3 verdict #3)
+    # the prefix-filtered PPJoin plan, the one that runs at 100 TB; its
+    # quadratic exact twin (llm_ngram_jaccard) stays registered as the
+    # oracle proof but is not timed
     "llm_ngram_jaccard_prefix",
     "llm_ann_brute_topk",
     "llm_text_stats",
-    # the two iterative / global-rank plans (round-2 verdict: time them
-    # every round so their scale-safe formulations stay honest)
+    # the iterative and global-rank plans: timed so their scale-safe
+    # formulations stay honest
     "dblp_coauthor_components_star",
     "tpch_window_ntile",
-    # round-5 additions (new slots; the 15 slots above stay unchanged
-    # for round-over-round comparability): the train-then-assign
-    # composition at its corpus-scaled K (the K=4 oracle demonstrator
-    # freezes cluster count while the sf1 corpus 10xes — sum-cluster^2
-    # pair work makes that the wrong operating point to time, see
-    # queries/pipeline.py SEMDEDUP_K32_IDS) and the bigram-LM scoring
-    # pass
+    # train-then-assign SemDeDup at a corpus-sized K (frozen K=4 makes
+    # sum-cluster^2 pair work the wrong operating point to time at sf1;
+    # queries/pipeline.py SEMDEDUP_K32_IDS)
     "llm_semdedup_trained_k32",
     "llm_bigram_lm_score",
-    # tokenizer apply at corpus scale: trained merge rules broadcast,
-    # corpus never shuffles to encode (queries/bpe.py)
+    # tokenizer apply: trained merge rules broadcast, corpus never shuffles
     "llm_bpe_encode",
-    # round-6 addition: the corpus-computed-K SemDeDup (K = isqrt(N);
-    # k32's hand-picked operating point stays above for
-    # round-over-round comparability — this slot times the rule)
+    # SemDeDup with K = isqrt(N) computed from the corpus
     "llm_semdedup_scaled",
-    # round-9 additions (round-8 verdict #6): the two pair-stage
-    # champions whose spread_for_pair_join histories (519 s -> 31 s and
-    # 86 s -> 11 s at sf1) this project cites — without a tracked slot a
-    # future spread regression would surface only as a pytest timeout
+    # the spread_for_pair_join pair stages: without a slot, a spread
+    # regression would surface only as a pytest timeout
     "llm_winnow_pairs",
     "llm_substring_spans",
 ]
 
 
+def best_of(n_runs: int, action: Callable[[], object]) -> float:
+    """Best wall time of ``n_runs`` calls of ``action``, in seconds."""
+    best = float("inf")
+    for _ in range(n_runs):
+        t0 = time.time()
+        action()
+        best = min(best, time.time() - t0)
+    return round(best, 3)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from map_reduce_for_dbpl_dataset_spark.session import get_spark
-
     import __spark_entry__ as entrymod
 
-    spark = get_spark("bench")
     qs = entrymod.queries()
-    names = [n for n in HEADLINE if n in qs]
+    # a renamed query must fail the run, not drop its slot and read as a
+    # smaller headline total
+    missing = [n for n in HEADLINE if n not in qs]
+    if missing:
+        raise SystemExit(f"HEADLINE names not in the registry: {missing}")
+
+    from map_reduce_for_dbpl_dataset_spark.session import get_spark
+
+    spark = get_spark("bench")
 
     # warm the session (JVM/codegen), the parquet datasource, and the
     # window/explode/aggregate execution paths so the first timed query
     # doesn't absorb one-time initialization costs
-    from pyspark.sql import Window
+    from pyspark.sql import DataFrame, Window
     from pyspark.sql import functions as F
 
     spark.range(1000).count()
@@ -471,107 +149,58 @@ def main() -> None:
         .count()
     )
 
-    # best-of-N per query: the grading environment is heavily contended
-    # (round-1 driver ran identical code 3-11x slower than local, with
-    # the first timed query absorbing leftover init); the min of two
-    # executions measures the plan, not scheduler noise. Fresh
-    # DataFrames each run — only deliberately persisted intermediates
-    # (the shared shingle table, by design) carry over, exactly as they
-    # do across queries in steady state.
+    # Best of N per slot: the min measures the plan, not scheduler noise
+    # on a contended machine. Only deliberately persisted intermediates
+    # (the shared shingle table) carry over between runs, exactly as
+    # they do across queries in steady state.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 
-    # Machine-drift calibration (round-5 verdict #2): a fixed synthetic
-    # shuffle+agg whose code NEVER changes across rounds.  It touches no
-    # input data and no repo operators, so any round-over-round movement
-    # in calibration_sec is environment (CPU contention, JVM, scheduler)
-    # — dividing headline totals by it separates machine drift from plan
-    # drift arithmetically instead of by argument from inflation
-    # patterns (round 5's uniform +35% on untouched slots).
-    def time_calibration(n_runs: int) -> float:
-        best = float("inf")
-        for _ in range(n_runs):
-            t0 = time.time()
-            (
-                spark.range(50_000_000)
-                .select((F.col("id") % 10_000).alias("k"), F.col("id").alias("v"))
-                .groupBy("k")
-                .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-                .write.format("noop").mode("overwrite").save()
-            )
-            best = min(best, time.time() - t0)
-        return round(best, 3)
+    def noop(df: DataFrame) -> None:
+        df.write.format("noop").mode("overwrite").save()
 
-    def time_bigram_floor(sf_path: str, n_runs: int) -> float:
-        """Bare tokenize + bigram explode + count over documents: the
-        text-scan floor under llm_bigram_lm_score (round-7 verdict #6
-        — record the floor so the query's slot reads as a multiple of
-        the irreducible scan cost, not an absolute to chase)."""
+    def calibration() -> None:
+        noop(
+            spark.range(50_000_000)
+            .select((F.col("id") % 10_000).alias("k"), F.col("id").alias("v"))
+            .groupBy("k")
+            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
+        )
+
+    def bigram_floor(sf_path: str) -> None:
         from map_reduce_for_dbpl_dataset_spark.functions.text import (
             tokens,
             word_shingles,
         )
 
-        best = float("inf")
-        for _ in range(n_runs):
-            t0 = time.time()
-            (
-                spark.read.parquet(os.path.join(sf_path, "documents.parquet"))
-                .select(
-                    "doc_id",
-                    F.explode(word_shingles(tokens(F.col("text")), 2)).alias("bg"),
-                )
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
+        noop(
+            spark.read.parquet(os.path.join(sf_path, "documents.parquet"))
+            .select(
+                "doc_id",
+                F.explode(word_shingles(tokens(F.col("text")), 2)).alias("bg"),
             )
-            best = min(best, time.time() - t0)
-        return round(best, 3)
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
 
-    def time_scan_calibration(sf_path: str, n_runs: int) -> float:
-        """Scan-shaped drift yardstick (round-10): the synthetic
-        shuffle calibration above touches no input files, so the
-        page-cache / co-tenancy effects that dominate parquet-scan-
-        heavy queries are invisible to it — the r7-r9 plan-identical
-        rounds moved ~+/-10% normalized for exactly that reason
-        (module docstring).  This slot times a fixed projection +
-        aggregate over lineitem, the largest table at the scale
-        point; its code never changes across rounds, so movement
-        here is I/O-side environment drift.  Timed AFTER the query
-        suite so the first-scan init cost (file listing, footers)
-        stays charged to the same slot it always was."""
-        best = float("inf")
-        for _ in range(n_runs):
-            t0 = time.time()
-            (
-                spark.read.parquet(os.path.join(sf_path, "lineitem.parquet"))
-                .select(
-                    (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("v"),
-                    "l_returnflag",
-                )
-                .groupBy("l_returnflag")
-                .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
+    def scan_calibration(sf_path: str) -> None:
+        noop(
+            spark.read.parquet(os.path.join(sf_path, "lineitem.parquet"))
+            .select(
+                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("v"),
+                "l_returnflag",
             )
-            best = min(best, time.time() - t0)
-        return round(best, 3)
+            .groupBy("l_returnflag")
+            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
+        )
 
-    def time_suite(sf_path: str, n_runs: int) -> dict[str, float]:
-        t: dict[str, float] = {}
-        for name in names:
-            best = float("inf")
-            for _ in range(n_runs):
-                t0 = time.time()
-                qs[name](spark, sf_path).write.format("noop").mode("overwrite").save()
-                best = min(best, time.time() - t0)
-            t[name] = round(best, 3)
-        return t
+    def time_suite(sf_path: str) -> dict[str, float]:
+        return {
+            name: best_of(runs, lambda: noop(qs[name](spark, sf_path)))
+            for name in HEADLINE
+        }
 
-    calibration = time_calibration(runs)
-    times = time_suite(sf_dir, runs)
+    calibration_sec = best_of(runs, calibration)
+    times = time_suite(sf_dir)
 
     sf = sf_dir.rstrip("/").split("sf")[-1]
     try:
@@ -585,21 +214,17 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "sf": sf_val,
-        # environment yardstick + the normalized total (headline
-        # seconds per calibration second) — compare THIS across rounds
-        "calibration_sec": calibration,
-        "value_per_calibration": round(total / calibration, 3) if calibration else None,
-        # text-scan floor under llm_bigram_lm_score (docstring)
-        "bigram_floor_sec": time_bigram_floor(sf_dir, runs),
-        # scan-shaped environment yardstick (see time_scan_calibration)
-        "calibration_scan_sec": time_scan_calibration(sf_dir, runs),
-        # best-of-N count actually used, so cross-round variance
-        # debates (module docstring, sf1 band) know the run count
+        "calibration_sec": calibration_sec,
+        "value_per_calibration": (
+            round(total / calibration_sec, 3) if calibration_sec else None
+        ),
+        # timed after the suite so the first-scan init cost of documents
+        # and lineitem stays charged to the same slots
+        "bigram_floor_sec": best_of(runs, lambda: bigram_floor(sf_dir)),
+        "calibration_scan_sec": best_of(runs, lambda: scan_calibration(sf_dir)),
         "bench_runs": runs,
     }
 
-    # second scale point: ~10x key-shift-replicated fixtures (built on
-    # first use — ~30 s, one-time per workspace, gitignored)
     scale_dir = os.environ.get(
         "SPARK_GRAFT_SCALE_DIR",
         os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "sf1"),
@@ -630,22 +255,20 @@ def main() -> None:
         # Stage every sf1 key in a local dict and merge into the output
         # only after ALL of them computed: a failure partway (e.g. in
         # the lineitem row count) then cannot emit partial sf1 data
-        # that looks complete, and there is no cleanup key list to keep
-        # in sync with the assignments (round-10 + round-11 ADVICE).
+        # that looks complete.
         try:
-            scale_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS_SCALE", str(runs)))
-            times_sf1 = time_suite(scale_dir, scale_runs)
+            times_sf1 = time_suite(scale_dir)
             sf1_out = {
                 "queries_sf1": times_sf1,
                 "value_sf1": round(sum(times_sf1.values()), 3),
-                "bigram_floor_sec_sf1": time_bigram_floor(scale_dir, scale_runs),
-                "calibration_scan_sec_sf1": time_scan_calibration(
-                    scale_dir, scale_runs
+                "bigram_floor_sec_sf1": best_of(runs, lambda: bigram_floor(scale_dir)),
+                "calibration_scan_sec_sf1": best_of(
+                    runs, lambda: scan_calibration(scale_dir)
                 ),
                 "sf1_lineitem_rows": spark.read.parquet(
                     os.path.join(scale_dir, "lineitem.parquet")
                 ).count(),
-                "bench_runs_scale": scale_runs,
+                "bench_runs_scale": runs,
             }
             out.update(sf1_out)
         except Exception as exc:  # degrade to the primary-only JSON line

@@ -59,9 +59,14 @@ def _narrow_q32(q: Column, n2: Column) -> Column:
     >= 2.7e8 at dim 64 — two orders of magnitude outside any unit-ish
     embedding at scale=1000, and within 2x of where the exact int64
     dot itself stops being guaranteed.
+    The guard assumes n2 itself did not overflow int64: a wrapped n2
+    could pass the bound while an element exceeds int32 (the integer-dot
+    contract above rules that input out).
     dot_q/norm2_q widen elements back to long before multiplying, so
-    the arithmetic — and every oracle-checked result — is unchanged."""
-    return F.when(
+    the arithmetic — and every oracle-checked result — is unchanged.
+    A null vector narrows to null; a non-null vector whose n2 is null
+    raises, because its bound cannot be checked."""
+    return F.when(q.isNull(), F.lit(None).cast("array<int>")).when(
         n2 <= F.lit(_INT32_MAX * _INT32_MAX),  # (2^31-1)^2 as a long literal
         F.transform(q, lambda x: x.cast("int")),
     ).otherwise(

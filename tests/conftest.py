@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 import pytest
 
@@ -11,12 +12,10 @@ from map_reduce_for_dbpl_dataset_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# The shared test session's shape — single source of truth, imported by
-# tools/cost_ledger.py so COSTS.md is measured at the shape the suite
-# actually pays for.  On a 32-core host, 16 threads cut the three
-# heaviest sf1 oracle-net rows from 360 s (4 threads) to 131 s while
-# leaving cores for DuckDB oracle phases and Python UDF workers; capped
-# at cpu_count so a smaller host does not oversubscribe.
+# The shared test session's shape.  On a 32-core host, 16 threads cut
+# the three heaviest sf1 oracle-net rows from 360 s (4 threads) to
+# 131 s while leaving cores for DuckDB oracle phases and Python UDF
+# workers; capped at cpu_count so a smaller host does not oversubscribe.
 # Results do not depend on the value: the hash-identity net is
 # partition-count-invariant by construction, and the session stays
 # multi-partition so that property is exercised.
@@ -28,6 +27,21 @@ def pytest_configure(config):
     config.addinivalue_line(
         "markers", "slow: multi-minute scale tests (large synthesized inputs)"
     )
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say what the run did not run: one line per skip reason with its
+    count (e.g. the sf1 oracle net when fixtures/sf1 is absent), also in
+    a -q run.  Reports only; it changes no test selection."""
+    reasons = Counter(
+        rep.longrepr[2].removeprefix("Skipped: ")
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple)
+    )
+    if reasons:
+        terminalreporter.section("skipped, by reason")
+        for reason, n in reasons.most_common():
+            terminalreporter.write_line(f"{n:4d}  {reason}")
 
 
 @pytest.fixture(scope="session")

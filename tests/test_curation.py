@@ -107,7 +107,7 @@ def test_dedup_incremental_against_python_sets(spark, sf_dir):
     assert any(r.survives for r in out.values())
 
 
-# --- round-4 batch: semdedup, overlapping chunking, mixture sampling ---------
+# --- semdedup, overlapping chunking, mixture sampling ------------------------
 
 
 def test_semdedup_keep_semantics(spark):
@@ -312,7 +312,7 @@ def test_embed_classifier_matches_python_rescan(spark, sf_dir):
     """Independent rescan of the exact nearest-prototype argmin in
     the centroid form (mu_k = s_k div n_k elementwise with truncation
     toward zero, f = |x - mu_k|^2, ties to the lower class id — the
-    round-6 corpus-independent-bound formulation).  The synthetic
+    corpus-independent-bound formulation).  The synthetic
     embeddings are barely label-correlated (sf0.001 holdout accuracy
     ~= chance, 3 predicted classes), so assertions are structural —
     exact rescan agreement, non-constant predictions — not an
@@ -403,8 +403,8 @@ def test_semdedup_scaled_k_rule_and_sql_twin():
 
 
 def test_semdedup_matmul_assignment_matches_expression_argmax(spark, sf_dir):
-    """The Arrow-batched matmul assignment (round-6,
-    operators/similarity.py _semdedup_assigned) must pick the same
+    """The Arrow-batched matmul assignment
+    (operators/similarity.py _semdedup_assigned) must pick the same
     cell as an independent JVM-expression argmax — (cosine desc,
     cell asc) via a row_number window — on the real embedding
     fixture with a trained codebook.  Guards the exactness claim
@@ -503,8 +503,9 @@ def test_narrow_guard_raises_on_oversized_element(spark):
 
 def test_narrow_roundtrip_at_int32_edge(spark):
     # the guard is n2-based and conservative: a SINGLE max-magnitude
-    # element sits exactly on the (2^31-1)^2 boundary and must pass
-    for vals in ([2_147_483_647], [-2_147_483_647], [0, 123, -456]):
+    # element sits exactly on the (2^31-1)^2 boundary and must pass;
+    # a null vector passes through as null
+    for vals in ([2_147_483_647], [-2_147_483_647], [0, 123, -456], None):
         df = spark.createDataFrame([(vals,)], "q array<long>").select(
             _narrow_q32(F.col("q"), norm2_q(F.col("q"))).alias("q32")
         )

@@ -238,8 +238,8 @@ def test_spread_for_pair_join_plan_and_result(spark):
     assert "Scan ExistingRDD" in plan
     n = 2 * spark.sparkContext.defaultParallelism
     # one regex binds the key and the partition count in a single match
-    # (round-8 ADVICE: two independent substring checks could pass with
-    # the wrong repartition width)
+    # (two independent substring checks could pass with the wrong
+    # repartition width)
     assert re.search(rf"hashpartitioning\(key#\d+[^)]*, {n}\)", plan), plan
     # the self-join on the spread frame stays co-partitioned and pair
     # counts are exact (sum over keys of n_k * (n_k - 1) / 2)

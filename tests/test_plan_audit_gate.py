@@ -1,15 +1,14 @@
 """Gate: the physical-plan audit must pass at head, and the committed
 PLANS.md must be the report of THAT run.
 
-Why this test exists: rounds 5 and 6 both ended with
-``python tools/plan_audit.py`` exiting 1 while ``pytest tests/``
-stayed green — a lineage-cut refactor hid an audited subtree from its
-needle, and the committed PLANS.md (regenerated earlier) kept showing
-the property ✅, so the repo shipped an all-green report that a fresh
-run contradicted.  The plan properties are the 100-TB design contract
-(no cartesian pair stages, partial aggregation, pinned joins, spread
-pair fan-outs); a silent regression is exactly what they exist to
-catch, so the audit's exit code is asserted here, CI-style.
+Why this test exists: without it ``python tools/plan_audit.py`` can
+exit 1 while ``pytest tests/`` stays green — a refactor that hides an
+audited subtree from its needle leaves the committed PLANS.md showing
+the property ✅, an all-green report that a fresh run contradicts.
+The plan properties are the 100-TB design contract (no cartesian pair
+stages, partial aggregation, pinned joins, spread pair fan-outs); a
+silent regression is exactly what they exist to catch, so the audit's
+exit code is asserted here, CI-style.
 """
 
 from __future__ import annotations
@@ -31,14 +30,14 @@ def _audit_source_digest() -> str:
     the committed report, AND the plan-shaping environment — the
     installed pyspark version and ``SPARK_GRAFT_CPUS`` (which sets the
     session's shuffle-partition count, so hashpartitioning nodes in the
-    plan text carry it).  Round-9 ADVICE: without the environment
-    inputs, a cached green from one environment silently skipped the
-    gate in another where a fresh run would fail.  (The planned-against
+    plan text carry it).  Without the environment inputs, a cached
+    green from one environment would silently skip the gate in another
+    where a fresh run fails.  (The planned-against
     sf0.01 testdata is immutable, so it is not part of the key.)"""
     h = hashlib.sha256()
     # NUL-delimit each variable-length field so distinct input
     # combinations cannot concatenate to the same byte stream (e.g.
-    # version "4.1.2" + cpus "32" vs "4.1.23" + "2" — round-10 ADVICE).
+    # version "4.1.2" + cpus "32" vs "4.1.23" + "2").
     h.update(pyspark.__version__.encode() + b"\0")
     h.update(os.environ.get("SPARK_GRAFT_CPUS", "32").encode() + b"\0")
     paths = sorted(
@@ -52,10 +51,10 @@ def _audit_source_digest() -> str:
     # The AQE/session conf that shapes every audited plan lives in
     # session.py, which the package rglob above covers — pin that so a
     # future move out of the package cannot silently drop it from the
-    # key (round-13 verdict item 7).  Match the exact relative path,
-    # not the basename (round-14 ADVICE): an unrelated file that
-    # happens to be named session.py elsewhere under the package must
-    # not be able to mask a move of the real conf module.
+    # key.  Match the exact relative path, not the basename: an
+    # unrelated file that happens to be named session.py elsewhere
+    # under the package must not be able to mask a move of the real
+    # conf module.
     session_rel = Path("map_reduce_for_dbpl_dataset_spark") / "session.py"
     assert any(p.relative_to(REPO) == session_rel for p in paths), (
         "session.py (AQE/plan-shaping conf) left the digest's coverage"
@@ -69,9 +68,9 @@ def _audit_source_digest() -> str:
 
 
 def test_plan_audit_exits_green_and_report_is_current(request):
-    # The subprocess plans all 134 batch queries (~5 min); round-8
-    # ADVICE flagged that cost on every interactive pytest run.  Cache
-    # the green result keyed on a digest of the audit-relevant source:
+    # The subprocess plans all 134 batch queries (~5 min), too much
+    # for every interactive pytest run.  Cache the green result keyed
+    # on a digest of the audit-relevant source:
     # any edit to the package, the auditor, the entry module, or
     # PLANS.md changes the key and forces a fresh run, so the gate
     # stays always-on while unchanged-source re-runs are instant.

@@ -426,7 +426,7 @@ def test_dedup_levenshtein_matches_definition(spark, tmp_path):
     the length band, plus a cross-block near-identical pair (edit
     inside the prefix -> different blocks -> no pair, by the blocking
     definition both engines share).  This is the sf1-oracle-excluded
-    query's definition replay (round-8 verdict #7; DuckDB has no
+    query's definition replay (DuckDB has no
     threshold levenshtein, so its oracle is sf0.01-only)."""
     import random
     from itertools import combinations

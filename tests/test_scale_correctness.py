@@ -9,14 +9,17 @@ AQE re-plans, and the two-regime LSH path included.
 Table-backed oracles run as-is; the dblp oracles pin the committed
 publications fixture by ABSOLUTE path, so for the graph family the
 test rewrites that one literal path to the scale dir's inflated
-publications.parquet (same SQL, 10x input — round-4 verdict #5).
-Skipped when the scale fixtures are absent.
+publications.parquet (same SQL, 10x input).  Skipped when the scale
+fixtures are absent.
 
-GREEN-RESULT CACHE (round-11 verdict item 2 — full-suite wall time
-back under ~20 min with this net intact and always-on; the verdict
-itself named "digest-key a cache like tests/test_plan_audit_gate.py's"
-as an accepted mechanism): each green per-query result is cached in
-the pytest cache keyed on a digest of every input that can change the
+Net membership is decided here and nowhere else: a registry query is
+either in SCALE_QUERIES or in EXCLUDED with the reason it is left out.
+What each row costs comes from any run:
+``pytest tests/test_scale_correctness.py --durations=0 -p no:cacheprovider``
+(without the cache flag a cached green row skips and reads ~0 s).
+
+GREEN-RESULT CACHE: each green per-query result is cached in the
+pytest cache keyed on a digest of every input that can change the
 outcome — the whole query/operator package, the entry module, this
 test file, conftest.py (it pins the session's cpus/shuffle-partition
 counts), the pyspark AND duckdb versions (both engines' results feed
@@ -27,23 +30,10 @@ digest from the parquet files on disk and is deliberately NEVER
 cached — runs in the same session and fails loudly on any drift.  Any
 edit to code, oracles, environment, or fixtures changes the key and
 re-runs the full net; unchanged-source re-runs skip straight through,
-exactly the plan-audit gate's contract.  MEASURED (round 12, quiet
-machine): this file 18m23s cold / 3.3s warm; the full 179-test suite
-4m01s warm vs the 22.4 min of round 10 — per-row cold costs live in
-the generated COSTS.md.  Round 15 closed the cold-time plateau
-(round-14 verdict item 5): the suite session moved to
-conftest.SUITE_CPUS=16 (from the original 4-of-32-cores shape),
-cutting the net's Spark side 714.8 -> 403.2 s (COSTS.md regenerated
-at the new shape) and the full cold 181-test suite to 16m45s /
-17m00s / 18m26s across three same-day round-15 runs (cacheprovider
-enabled) — consistently under the ~20 min target (vs the ~24 min
-plateau) with the 70-row net's membership untouched; warm re-run
-1.9 s.  Fully-cold adversarial runs (`-p no:cacheprovider`, busy
-machine) can read ~19 min — the round-15 judge measured 19m08s —
-so treat anything inside ~16.5-19.5 min as the same plateau, not
-drift.  (The sf0.1 union-find replay
-below keys on the same digest; /root/testdata is immutable, matching
-the plan-audit gate's rationale for leaving testdata out of the key.)
+exactly the plan-audit gate's contract.  (The sf0.1 union-find replay
+below keys on the same digest; the committed testdata sets are
+immutable, matching the plan-audit gate's rationale for leaving
+testdata out of the key.)
 """
 
 from __future__ import annotations
@@ -87,26 +77,24 @@ SCALE_QUERIES = [
     "llm_ann_pq_trained",
     "llm_cluster_top_terms",
     "llm_decontaminate_semantic",
-    # round-5 tokenizer family at 10x documents: training's unrolled
-    # 8-round CTE, the broadcast-rules corpus encode, and the chunked
-    # postings build (object-hash collect at 10x)
+    # tokenizer family at 10x documents: training's unrolled 8-round
+    # CTE, the broadcast-rules corpus encode, and the chunked postings
+    # build (object-hash collect at 10x)
     "llm_bpe_train",
     "llm_bpe_encode",
     "llm_inverted_index",
-    # round-6 newcomers to the sf1 net (round-5 verdict #7): the
-    # centroid-form classifier at 10x rows/class (its BIGINT score
+    # the centroid-form classifier at 10x rows/class (its BIGINT score
     # bound is corpus-independent — this point proves it) and the
     # corpus-computed-K SemDeDup (K moves 22 -> 141 across the scale
     # points; the oracle computes the same K in SQL)
     "llm_embed_classifier",
     "llm_semdedup_scaled",
-    # round-6 net widening (all oracles measured <10 s in DuckDB at
-    # sf1): simhash chunk-join dedup, the GK-sketch threshold
-    # selection (sketch merge order changes with partitioning — this
-    # point proves the bounds construction survives it), the 7-table
-    # market-share star, funnel + retention over 10x events, the
-    # rolling-hash fingerprints, the trained-IVF ANN composition,
-    # and the skew-demo salted join
+    # simhash chunk-join dedup, the GK-sketch threshold selection
+    # (sketch merge order changes with partitioning — this point proves
+    # the bounds construction survives it), the 7-table market-share
+    # star, funnel + retention over 10x events, the rolling-hash
+    # fingerprints, the trained-IVF ANN composition, and the skew-demo
+    # salted join
     "llm_dedup_simhash",
     "llm_quality_select_approx",
     "tpch_market_share",
@@ -116,12 +104,9 @@ SCALE_QUERIES = [
     "llm_ann_ivf_trained",
     "tpch_salted_join",
     "llm_hard_negatives",
-    # final round-6 batch: the text-analysis family (langid, stats,
-    # PII, repetition, boilerplate df-cap), the sketch pair
-    # (percentiles, HLL-vs-exact), and the sqrt-apportioned mixture —
-    # all oracles <20 s in DuckDB at sf1.  Deliberately excluded:
-    # tpch_window_lag_gap (1.5M-row output makes the python-side
-    # tuple compare the cost, not the engines).
+    # the text-analysis family (langid, stats, PII, repetition,
+    # boilerplate df-cap), the sketch pair (percentiles,
+    # HLL-vs-exact), and the sqrt-apportioned mixture
     "llm_langid",
     "llm_text_stats",
     "llm_pii_scrub",
@@ -130,31 +115,19 @@ SCALE_QUERIES = [
     "tpch_percentiles",
     "tpch_approx_distinct",
     "llm_domain_mixture",
-    # the interval join joined the net once its oracle aggregated the
-    # point side to per-date counts (pair-exact, 0.5 s vs the raw
-    # IEJoin's 402 s at sf1)
+    # the oracle aggregates the point side to per-date counts
+    # (pair-exact, and a raw IEJoin oracle would take minutes here)
     "tpch_interval_join",
-    # winnowing joined the net with the round-6 lineage cuts (Spark
-    # side 519 s -> 38 s at sf1; its DuckDB oracle is 25 s there).
-    # llm_dedup_levenshtein stays oracle-excluded — DuckDB has no
-    # threshold levenshtein, so its oracle pays the full O(len^2) DP
-    # on every blocked pair (hours at sf1); the Spark side is covered
-    # by the contract test below instead.
+    # the two spread_for_pair_join text pair stages
     "llm_winnow_pairs",
-    # round-8: after two rounds of plan-audit blindness on this exact
-    # query (its df-cap subtree hid behind lineage cuts), the
-    # substring-span dedup earns the 10x oracle, not just sf0.01 —
-    # its shingle-position pair join is the same spread_for_pair_join
-    # shape the winnowing slot proves.
     "llm_substring_spans",
-    # round-8 net widening: the third spread_for_pair_join caller
-    # (hyperplane-bucketed embedding near-pairs), the three
-    # Python-worker/Arrow surfaces previously proven only at sf0.01
+    # the third spread_for_pair_join caller (hyperplane-bucketed
+    # embedding near-pairs), the Python-worker/Arrow surfaces
     # (grouped-map, scalar pandas UDF, mapInArrow — partitioning
     # changes batch boundaries at 10x, exactly what those paths must
-    # be invariant to), the exact-dedup window, the Expand-based
-    # cube, and the greedy sequence packer (its window state is
-    # per-source — 10x rows per source probes the bound).
+    # be invariant to), the exact-dedup window, the Expand-based cube,
+    # and the greedy sequence packer (its window state is per-source —
+    # 10x rows per source probes the bound)
     "llm_dedup_embedding",
     "llm_zscore_grouped_map",
     "llm_quality_pandas_udf",
@@ -162,21 +135,12 @@ SCALE_QUERIES = [
     "llm_dedup_exact",
     "tpch_cube_lineitem",
     "llm_sequence_pack",
-    # round-9 net widening (round-8 verdict #5; each candidate timed
-    # before admission — Spark + oracle seconds at sf1 in parens): the
-    # frozen-K=4 SemDeDup demonstrators (30+6 s / 26+7 s — deliberately
-    # the wrong operating point at 10x, which is exactly why their hash
-    # identity is worth proving here; k32/scaled above remain the
-    # operating-point proofs), the PageRank fixpoint (4+1 s), the
-    # bloom-pruned join (2+0.1 s), the anti-join-vs-snapshot
-    # incremental dedup (2+1 s), the skew-demo salted agg (2+0.3 s),
-    # the exact 13-gram decontamination twin of the semantic variant
-    # already in the net (10+7 s), and the overlapped chunker (9+1 s).
-    # Measured-and-excluded: llm_dedup_clusters (160 s DuckDB oracle),
-    # dblp_coauthor_components (47 s oracle), and the ~1M-row-output
-    # queries (tpch_asof_latest_order, tpch_events_session) where the
-    # python-side tuple compare would be the cost, not the engines —
-    # same rationale as tpch_window_lag_gap above.
+    # the frozen-K=4 SemDeDup demonstrators (deliberately the wrong
+    # operating point at 10x, which is why their hash identity is
+    # worth proving here), the PageRank fixpoint, the bloom-pruned
+    # join, the anti-join-vs-snapshot incremental dedup, the skew-demo
+    # salted agg, the exact 13-gram decontamination twin of the
+    # semantic variant, and the overlapped chunker
     "llm_semdedup",
     "llm_semdedup_trained",
     "dblp_pagerank",
@@ -185,22 +149,13 @@ SCALE_QUERIES = [
     "tpch_salted_agg",
     "llm_decontaminate",
     "llm_chunk_overlap",
-    # round-10 net widening (Spark + oracle seconds at sf1 in parens,
-    # measured before admission): the remaining Python-worker surfaces
-    # not yet proven at 10x — the grouped-AGG pandas UDF form (7+0.1 s;
-    # grouped-map and scalar forms were admitted in round 8, this is
-    # the third Arrow shape), the Python UDTF (1+0.1 s), and the three
-    # binary-column mapInPandas multimodal paths (2+0.1 s / 2+0.3 s /
-    # 1+0.7 s — Arrow batch boundaries move at 10x, exactly what the
-    # stub-decode plumbing must be invariant to) — plus the two
-    # remaining sketches (CMS heavy hitters 4+0.9 s, incremental HLL
-    # merge 3+0.1 s: merge order changes with partitioning, same
-    # rationale as the GK sketch) and the integer-exact Lloyd's
-    # k-means fixpoint (5+1.4 s — iteration count and partial-agg
-    # merge order both move at 10x).  Measured-and-excluded:
-    # tpch_asof_cogroup (27 s Spark, 1M-row output — the python-side
-    # tuple compare would be the cost, same rationale as
-    # tpch_window_lag_gap above).
+    # the grouped-AGG pandas UDF (the third Arrow shape), the Python
+    # UDTF, and the three binary-column mapInPandas multimodal paths
+    # (Arrow batch boundaries move at 10x, exactly what the stub-decode
+    # plumbing must be invariant to); the CMS and incremental-HLL
+    # sketches (merge order changes with partitioning, as for the GK
+    # sketch); and the integer-exact Lloyd's k-means fixpoint
+    # (iteration count and partial-agg merge order both move at 10x)
     "llm_trimmed_mean_grouped_agg",
     "tpch_udtf_series",
     "llm_multimodal_features",
@@ -209,24 +164,11 @@ SCALE_QUERIES = [
     "tpch_cms_heavy_hitters",
     "tpch_hll_incremental",
     "llm_kmeans",
-    # round-12 net widening — the last oracle-feasible families not yet
-    # at 10x (round-10 item 5 / round-11 item 4; Spark + oracle seconds
-    # at sf1 in parens, measured before admission): the streaming
-    # parity family — micro-batch replay over 10x events moves batch
-    # boundaries, state-store merge order, and watermark advancement,
-    # exactly what the append-mode parities must be invariant to —
-    # tumbling (9.8+0.1 s), sliding (2.2+0.1 s), the dropDuplicates
-    # state path (6.6+0.1 s), the phased-late watermark DROP semantics
-    # (5.8+0.1 s), and the stream-stream interval join (4.2+0.1 s);
-    # plus the three format roundtrip sinks (json 0.8+0.1 s, orc
-    # 0.8+0.1 s, csv '|'-sep 1.1+0.1 s — each drives the full
-    # write-then-read path over 10x input).  Measured-and-excluded:
-    # stream_session_parity (14.3 s Spark but a 954,650-row output —
-    # the python-side tuple compare would be the cost, not the
-    # engines; same rationale as tpch_window_lag_gap above.  Its
-    # session-window state machinery is covered at 10x by the
-    # flatMapGroupsWithState row in the driver rotation and the
-    # sliding/tumbling state paths here).
+    # the streaming parity family: micro-batch replay over 10x events
+    # moves batch boundaries, state-store merge order, and watermark
+    # advancement, exactly what the append-mode parities must be
+    # invariant to; and the three format roundtrip sinks, each driving
+    # the full write-then-read path over 10x input
     "stream_tumbling_parity",
     "stream_sliding_parity",
     "stream_dedup_parity",
@@ -236,6 +178,38 @@ SCALE_QUERIES = [
     "tpch_sink_orc_roundtrip",
     "tpch_sink_csv_roundtrip",
 ]
+
+# Registry queries deliberately left out of the net, with the reason.
+# A huge output makes the Python-side tuple compare the cost, not the
+# engines; a recursive-CTE or unbounded-DP oracle costs minutes to
+# hours at sf1.
+EXCLUDED: dict[str, str] = {
+    "tpch_window_lag_gap": "1.5M-row output: the tuple compare is the cost",
+    "tpch_asof_latest_order": "~1M-row output: the tuple compare is the cost",
+    "tpch_events_session": "~1M-row output: the tuple compare is the cost",
+    "tpch_asof_cogroup": "1M-row output: the tuple compare is the cost",
+    "stream_session_parity": (
+        "954,650-row output: the tuple compare is the cost; session-window "
+        "state is covered by the sliding/tumbling rows and the sf0.01 gate"
+    ),
+    "llm_dedup_clusters": (
+        "recursive-CTE oracle over the full shingle self-join (~160 s); "
+        "test_dedup_clusters_match_union_find_at_scale replays it at sf0.1"
+    ),
+    "dblp_coauthor_components": (
+        "recursive-CTE oracle (~47 s); the components operator is "
+        "hash-checked here through dblp_coauthor_components_star"
+    ),
+    "llm_dedup_levenshtein": (
+        "DuckDB has no threshold levenshtein, so the oracle pays the full "
+        "O(len^2) DP per blocked pair (hours); "
+        "test_levenshtein_contract_at_scale checks the contract"
+    ),
+    "llm_leakage_free_split": (
+        "recursive-CTE shingle self-join oracle (~3 min); "
+        "test_leakage_split_invariant_at_scale checks the contract"
+    ),
+}
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -273,16 +247,16 @@ def _scale_net_digest() -> str:
         b = p.read_bytes()
         h.update(str(len(b)).encode() + b"\0")
         h.update(b)
-    # On-disk fixture-byte proxy (round-12 ADVICE): the manifest alone
-    # is only an honest proxy when test_scale_fixtures_match_manifest
+    # On-disk fixture-byte proxy: the manifest alone is only an
+    # honest proxy when test_scale_fixtures_match_manifest
     # runs in the same session, which node selection (-k/one test id)
     # defeats — an out-of-band parquet edit with an unchanged
     # MANIFEST.json would then keep serving stale greens.  Folding each
     # parquet file's size into the key catches any practical rewrite
     # cheaply (stat only; a same-size byte flip still needs the
     # never-cached manifest test, which full runs always execute).
-    # ACCEPTED RESIDUAL (round-13 verdict item 5): under single-test
-    # -k selection, an out-of-band parquet edit that preserves BOTH the
+    # ACCEPTED RESIDUAL: under single-test -k selection, an
+    # out-of-band parquet edit that preserves BOTH the
     # byte size and MANIFEST.json could still serve a stale green.
     # That requires deliberately crafting a same-size parquet rewrite
     # while suppressing the manifest recompute — adversarial, not
@@ -298,9 +272,8 @@ def _scale_net_digest() -> str:
 def _skip_if_cached_green(request, slot: str) -> None:
     """Skip the test iff this slot's last green run used byte-identical
     inputs (digest match).  None-cache (-p no:cacheprovider) → always
-    run.  A cache hit SKIPS rather than silently passing (round-12
-    ADVICE) so a run's -rs summary shows exactly how much of the net
-    actually executed."""
+    run.  A cache hit SKIPS rather than silently passing, so a run's
+    -rs summary shows exactly how much of the net actually executed."""
     cache = getattr(request.config, "cache", None)
     if cache is not None and (
         cache.get(f"scale_correctness/{slot}", None) == _scale_net_digest()
@@ -318,6 +291,22 @@ def _norm(v):
     return f"{v:.6g}" if isinstance(v, float) else ("\\N" if v is None else str(v))
 
 
+def test_scale_net_excluded_and_headline_are_registry_rows():
+    """A query is in the net or excluded, never both, and every name
+    here and in bench.HEADLINE is a registry query: a rename must fail
+    here, not silently drop a row or a timed slot.  Needs no Spark
+    session and no fixtures."""
+    import bench
+    from map_reduce_for_dbpl_dataset_spark.queries import all_queries
+
+    overlap = set(SCALE_QUERIES) & set(EXCLUDED)
+    assert not overlap, f"rows both in the net and excluded: {sorted(overlap)}"
+    ghosts = (set(SCALE_QUERIES) | set(EXCLUDED) | set(bench.HEADLINE)) - set(
+        all_queries()
+    )
+    assert not ghosts, f"names not in the registry: {sorted(ghosts)}"
+
+
 @pytest.mark.slow
 @pytest.mark.skipif(
     not os.path.isdir(SCALE_DIR), reason="scale fixtures not built"
@@ -327,10 +316,9 @@ def test_scale_fixtures_match_manifest():
     loudly, not quietly weaken every scale check below.  Recomputes the
     per-table row count + hash60 digest MANIFEST.json pinned at
     generation time (tools/make_scale_fixtures.py).  Also asserts the
-    manifest covers the FULL table set (round-12 ADVICE: a --tables
-    subset rebuild used to overwrite the manifest with only the
-    regenerated tables, and this loop — which iterates manifest
-    entries — would then never look at the dropped ones)."""
+    manifest covers the FULL table set: a manifest written by a
+    --tables subset rebuild can omit tables, and this loop — which
+    iterates manifest entries — would then never look at them."""
     from tools.make_scale_fixtures import table_digest
 
     with open(os.path.join(SCALE_DIR, "MANIFEST.json")) as fh:
@@ -424,9 +412,9 @@ def test_levenshtein_contract_at_scale(request):
     the 10x point checks the operator's CONTRACT Spark-side: every
     injected mutant pair is found at exactly distance 3, no reported
     pair exceeds the bound, and pairs are unique.  The full oracle
-    hash runs at sf0.01 in the driver gate.  Before the round-6
-    threshold-DP + length-band + salted-pair fixes this query did not
-    finish at this scale point (>28 min); the test doubles as the
+    hash runs at sf0.01 in the driver gate.  Without the threshold DP,
+    length band and salted pairs this query does not finish at this
+    scale point (>28 min); the test doubles as the
     regression guard for that."""
     _skip_if_cached_green(request, "levenshtein_contract")
     spark = request.getfixturevalue("spark")

@@ -5,7 +5,7 @@ operator — a Zipfian hot key, an event-burst time bin, a celebrity
 hub vertex, a hot LSH bucket — and asserts the scale-safe plan still
 computes the exact answer (vs a trusted naive execution at test
 scale) while honoring its structural bound (out-degree cap, salt
-spread). These are the round-3/4 verdict's regression guards: the
+spread). These are the regression guards for those shapes: the
 oracle hash checks verify the implemented algorithm on friendly data;
 these verify the algorithm's behavior on the data that kills the
 wrong plan."""
@@ -57,7 +57,7 @@ def test_lsh_hot_bucket_at_scale(spark):
     assert agg["max_b"] == N_HOT - 1
 
 
-# --- salted join under a Zipfian hot key (round-3 verdict #5) ---------------
+# --- salted join under a Zipfian hot key -------------------------------------
 
 N_BIG = 200_000
 N_KEYS = 1_000
@@ -193,7 +193,7 @@ def test_interval_join_event_burst_bin(spark):
     assert max_rep <= 0
 
 
-# --- triangle counting under a celebrity hub (round-3 verdict #7) -----------
+# --- triangle counting under a celebrity hub ---------------------------------
 
 
 @pytest.mark.slow
@@ -237,7 +237,7 @@ def test_triangles_hub_out_degree_bound(spark):
     assert hub_od == []  # the celebrity never fans out
 
 
-# --- LSH candidate recall vs exact Jaccard (round-3 verdict #6) -------------
+# --- LSH candidate recall vs exact Jaccard -----------------------------------
 
 
 @pytest.mark.slow
@@ -368,8 +368,8 @@ def test_substring_spans_df_cap_kills_boilerplate(spark, tmp_path_factory):
     assert q_substring_spans(spark, str(out_dir)).count() == 0
 
 
-# --- Zipf(s~1.5) spectrum probe at ~100x driver-gate scale (round-8
-#     verdict #8): the salted agg / salted join / per-group top-k
+# --- Zipf(s~1.5) spectrum probe at ~100x driver-gate scale: the
+#     salted agg / salted join / per-group top-k
 #     paths, against a full power-law key spectrum rather than the
 #     single-celebrity shape above ---------------------------------
 
@@ -458,10 +458,9 @@ def test_zipf_spectrum_salted_join(spark):
 
         # The claim under test is that salted_join actually repartitions
         # on the composite (k, _salt) key — not merely that the salt
-        # expression is well-distributed (round-9 ADVICE: the old
-        # bucket-count probe re-derived id % 16 on the raw fact, which
-        # any balanced expression passes without the join ever using
-        # it).  The physical plan must carry a hashpartitioning exchange
+        # expression is well-distributed (a bucket-count probe that
+        # re-derives id % 16 on the raw fact passes for any balanced
+        # expression without the join ever using it).  The physical plan must carry a hashpartitioning exchange
         # whose key list is (k, _salt).
         import re
 
@@ -537,17 +536,15 @@ def test_zipf_spectrum_top_k_per_group(spark):
 @pytest.mark.slow
 @pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_SCALE_PROBE") != "1",
-    reason="opt-in (round-11 verdict item 7): set SPARK_GRAFT_SCALE_PROBE=1",
+    reason="opt-in: set SPARK_GRAFT_SCALE_PROBE=1",
 )
 def test_pair_stage_scaling_exponent():
-    """Opt-in 30x scale-exponent probe for the pair-stage champions
-    (round-11 verdict item 7; the two SemDeDup subjects added round 13
-    per round-12 item 6): runs tools/scale_probe.py in its own
-    subprocess (own local[N] session — the probe measures throughput,
-    so it must not inherit this suite's deliberately
-    smaller-than-machine session — conftest.SUITE_CPUS, 16 since
-    round 15), which times each subject at the 10x (fixtures/sf1) and
-    30x single-table key-shift points and reports
+    """Opt-in 30x scale-exponent probe for the pair-stage champions:
+    runs tools/scale_probe.py in its own subprocess (own local[N]
+    session — the probe measures throughput, so it must not inherit
+    this suite's deliberately smaller-than-machine session,
+    conftest.SUITE_CPUS), which times each subject at the 10x
+    (fixtures/sf1) and 30x single-table key-shift points and reports
     exponent = log(t_30x/t_10x)/log(3).  Asserts every exponent stays
     under ITS OWN red line (carried in the probe output): 1.8 for the
     subquadratic claims (spread_for_pair_join text pairs + the
@@ -556,9 +553,8 @@ def test_pair_stage_scaling_exponent():
     x factor^2 BY CONSTRUCTION (vectors replicate verbatim, so
     clusters scale exactly x factor) — there the claim is that the
     salted pair stage tracks the predicted sum-cluster^2 work rather
-    than degrading beyond it.  MEASURED: see tools/scale_probe.py's
-    docstring for the pinned numbers per endpoint era; re-run any
-    time with `python tools/scale_probe.py`."""
+    than degrading beyond it.  Re-run any time with
+    `python tools/scale_probe.py`."""
     import json
     import subprocess
     import sys

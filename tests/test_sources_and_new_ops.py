@@ -193,7 +193,7 @@ def test_transform_with_state_gated_consistently(spark):
 
 def test_transform_with_state_gate_reports_actual_probe(spark, sf_dir):
     """The gate query's report row must track the REAL import outcome
-    — both branches asserted (round-5 verdict #8), so if this
+    — both branches asserted, so if this
     container ever gains the protobuf wheel the stale 'missing'
     report fails loudly here instead of rotting silently."""
     import duckdb

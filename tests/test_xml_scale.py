@@ -23,7 +23,7 @@ from map_reduce_for_dbpl_dataset_spark.sources.xml import (
 
 N_REPS = 75  # 75 x 1.3 MB fixture ~= 98 MB, 331,425 records
 
-# Opt-in ~1 GB variant (round-3 verdict #8): within 2.5x of the
+# Opt-in ~1 GB variant: within 2.5x of the
 # reference's actual 2.5 GB dblp.xml ingest (dblpXMLparser.scala:24).
 # Run manually: SPARK_GRAFT_XML_GB=1 pytest tests/test_xml_scale.py -m slow
 _GB_MODE = os.environ.get("SPARK_GRAFT_XML_GB") == "1"

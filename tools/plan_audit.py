@@ -344,7 +344,7 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     "tpch_salted_agg": [
         ("partial agg in both phases", "partial_sum"),
     ],
-    # round-9: per-query needles for the last 7 batch queries that had
+    # per-query needles for batch queries that would otherwise have
     # only the global sweep (the iterative families' per-round shapes
     # are separately pinned by the *[pre-checkpoint] CUSTOM_CHECKS
     # builders; these pin their FINAL-assembly plans).
@@ -428,7 +428,7 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
     ],
     "llm_winnow_pairs": [
         # fingerprint derivation + df-cap window sit behind the
-        # round-6 lineage cuts — audited pre-checkpoint by
+        # lineage cuts — audited pre-checkpoint by
         # winnow_fps[pre-checkpoint]; here the pair join must stay an
         # fp equi-join feeding a partial-agg'd pair count, spread
         # past AQE coalescing by spread_for_pair_join
@@ -665,7 +665,7 @@ CHECKS: dict[str, list[tuple[str, str]]] = {
         ("per-cluster top-k limited pre-exchange", "WindowGroupLimit"),
         ("no cartesian", "!CartesianProduct"),
     ],
-    # ---- round-8 coverage extension: the previously-unaudited batch
+    # ---- per-query needles for the remaining batch
     # families (join forms, scan pushdown, lateral/UDTF/python-source
     # surfaces, the exact-twin jaccard).  Streaming and sink-roundtrip
     # queries stay out of this harness by design: calling them
@@ -1217,7 +1217,7 @@ CUSTOM_CHECKS: dict = {
     "semdedup_assign[pre-checkpoint]": (
         _semdedup_assign_plan,
         [
-            # round-6: assignment is an Arrow-batched numpy matmul
+            # assignment is an Arrow-batched numpy matmul
             # (codebook in the task closure) — one MapInPandas over
             # the corpus, no N*K row explosion, no exchange at all
             ("vectorized Arrow matmul assignment", "MapInPandas"),
@@ -1235,7 +1235,7 @@ CUSTOM_CHECKS: dict = {
 }
 
 
-# --- streaming pre-start plans (round-9) -------------------------------------
+# --- streaming pre-start plans ----------------------------------------------
 # The stream_* registry entries are sweep-excluded because the driver-
 # facing callables RUN the stream to completion and return the final
 # table (a plain in-memory batch frame — auditing that plan would
@@ -1409,7 +1409,7 @@ def audit(sf_dir: str, write: bool) -> int:
         plans[name] = explain(fn(spark, sf_dir))
     # Every CHECKS key must correspond to a planned query: a key that is
     # sweep-excluded or misspelled would otherwise be silently dropped
-    # and its audit skipped with no failure (round-8 ADVICE).
+    # and its audit skipped with no failure.
     orphans = set(CHECKS) - set(plans)
     if orphans:
         raise SystemExit(

@@ -1,11 +1,10 @@
-"""Scale-exponent probe for the pair-stage champions (round-11
-verdict item 7; semdedup pair added round 13 per round-12 item 6):
-measure how each subject actually scales between the 10x point
-(fixtures/sf1) and a 30x single-table point (documents-only
-fixtures/sf3docs for the text pair, embeddings-only fixtures/sf3emb
-for the semdedup pair — each query reads only that table; both built
-on first use by tools/make_scale_fixtures.py with ``--factor 30
---tables <table>``), turning scaling claims into measured exponents:
+"""Scale-exponent probe for the pair-stage champions: measure how each
+subject actually scales between the 10x point (fixtures/sf1) and a 30x
+single-table point (documents-only fixtures/sf3docs for the text
+pairs, embeddings-only fixtures/sf3emb for the SemDeDup pairs — each
+query reads only that table; both built on first use by
+tools/make_scale_fixtures.py with ``--factor 30 --tables <table>``),
+turning scaling claims into measured exponents:
 
     exponent = log(t_30x / t_10x) / log(3)
 
@@ -16,8 +15,8 @@ grows, not quadratically as exact duplication would).  An exponent
 near 1 means the pair stage costs linearly in corpus size; 2 would
 mean the candidate join degraded to all-pairs.  The probe times the
 full query plan with the noop sink (no driver collect), best-of-2 at
-both scale points after a per-point warmup, and checks
-rows only — the 10x point's full oracle-hash identity lives in
+both scale points after a per-point warmup, and checks rows only —
+the 10x point's full oracle-hash identity lives in
 tests/test_scale_correctness.py.  Row-count expectations differ by
 query: substring spans have no df-cap, so more key-shifted copies
 means more shingle-sharing spans (count grows); winnow's count FALLS
@@ -26,116 +25,28 @@ doc reaches df ~ factor*5 and WINNOW_MAX_DF=50 drops it once
 replication crosses the cap — that regime shift is exactly the
 hot-key discipline the probe exists to exercise.
 
-Timing shape (changed round 13, round-12 ADVICE): the per-point
-``.count()`` that produces the row numbers now runs FIRST, doubling
-as the warmup run, and the timed noop-sink runs are best-of-2 at BOTH
-scale points — the old single timed 30x run vs best-of-2 at 10x
-biased the exponent upward one-sidedly.  The ADVICE's other
-suggestion — timing ``.count()`` itself as the endpoint — is UNSOUND
-here and deliberately not taken: Catalyst eliminates row-preserving
-subtrees under a bare count, and semdedup's final LEFT join against a
-distinct-keyed side is exactly that shape — its count plan carries
-zero joins (measured at the 30x point: count 5.7 s vs noop 26 s; the
-count skipped the salted pair stage this probe exists to measure).
+Timing shape: the per-point ``.count()`` that produces the row
+numbers runs FIRST, doubling as the warmup run, and the timed
+noop-sink runs are best-of-2 at BOTH scale points, so noise does not
+bias the exponent one way.  Timing ``.count()`` itself would be
+UNSOUND: Catalyst eliminates row-preserving subtrees under a bare
+count, and semdedup's final LEFT join against a distinct-keyed side
+is exactly that shape — its count plan carries zero joins (at the
+30x point: count 5.7 s vs noop 26 s; the count skipped the salted
+pair stage this probe exists to measure).
 
-MEASURED (round 12, noop endpoint, single timed 30x run, local[32]):
-
-    llm_substring_spans  t_10x 6.89 s  t_30x 15.74 s  ratio 2.28
-                         exponent 0.75   rows 2,328 -> 6,988
-    llm_winnow_pairs     t_10x 31.79 s  t_30x 87.79 s  ratio 2.76
-                         exponent 0.92   rows 38,933 -> 3,493
-
-MEASURED (round 13, noop endpoint, count-first warmup + best-of-2 at
-both points, local[32]):
-
-    llm_substring_spans       t_10x  7.53 s  t_30x 17.27 s  ratio 2.29
-                              exponent 0.76   rows 2,328 -> 6,988
-    llm_winnow_pairs          t_10x 35.79 s  t_30x 78.31 s  ratio 2.19
-                              exponent 0.71   rows 38,933 -> 3,493
-    llm_semdedup_trained_k32  t_10x  7.09 s  t_30x 26.67 s  ratio 3.76
-                              exponent 1.21   rows 20,020 -> 60,020
-    llm_semdedup_scaled       t_10x  6.03 s  t_30x 12.57 s  ratio 2.08
-                              exponent 0.67   rows 20,020 -> 60,020
-
-MEASURED (round 14 — the cross-round replicate round-13 verdict
-item 6 asked for, same methodology on a different day):
-
-    llm_substring_spans       t_10x  7.84 s  t_30x 16.10 s  ratio 2.05
-                              exponent 0.65   rows 2,328 -> 6,988
-    llm_winnow_pairs          t_10x 35.13 s  t_30x 81.86 s  ratio 2.33
-                              exponent 0.77   rows 38,933 -> 3,493
-    llm_semdedup_trained_k32  t_10x  7.59 s  t_30x 26.79 s  ratio 3.53
-                              exponent 1.15   rows 20,020 -> 60,020
-    llm_semdedup_scaled       t_10x  5.16 s  t_30x 10.98 s  ratio 2.13
-                              exponent 0.69   rows 20,020 -> 60,020
-
-MEASURED (round 18 — triggered by cadence condition (b) below: the
-winnow sf1 bench slot read 34.4/36.1 in two in-round controls whose
-code-free floors sat outside the entire driver-run history — see
-bench.py's ROUND-18 IN-ROUND CONTROLS paragraph; same methodology,
-run the same session as those controls):
-
-    llm_substring_spans       t_10x  9.30 s  t_30x 19.50 s  ratio 2.10
-                              exponent 0.67   rows 2,328 -> 6,988
-    llm_winnow_pairs          t_10x 32.49 s  t_30x 75.58 s  ratio 2.33
-                              exponent 0.77   rows 38,933 -> 3,493
-    llm_semdedup_trained_k32  t_10x  5.85 s  t_30x 25.44 s  ratio 4.35
-                              exponent 1.34   rows 20,020 -> 60,020
-    llm_semdedup_scaled       t_10x  6.56 s  t_30x 12.22 s  ratio 1.86
-                              exponent 0.57   rows 20,020 -> 60,020
-
-The round-18 re-run answered exactly the question it was armed for:
-with the bench slot's ABSOLUTE time elevated on a disturbed machine,
-the winnow exponent read 0.77 — identical to its banked r14 value
-with identical row counts — so the pair discipline had not regressed
-and the slot elevation was environmental.  Cumulative same-
-methodology spreads over four runs: spans 0.65-0.81, winnow
-0.71-0.78, scaled 0.57-0.73, k32 1.15-1.41 — every subject inside
-its noise allowance and under its red line.
-
-Probe noise band (round-12 item 7 — second data point, plus a
-same-methodology replicate): vs round 12 the spans exponent moved
-0.75 -> 0.76 (±0.01) and winnow 0.92 -> 0.71 (-0.21, in exactly the
-direction the round-13 warmup/best-of-2 fix predicts — the old
-single cold 30x run overcounted).  Two back-to-back round-13 runs of
-the SAME methodology on a quiet machine read spans 0.76/0.81, winnow
-0.71/0.78, k32 1.21/1.41, scaled 0.67/0.73 — the frozen-K control
-spreads widest (its quadratic 30x pair stage is the most
-load-sensitive slot).  Treat exponent deltas under ~0.2 as probe
-noise; every red line sits >= 0.6 above the worse of its two
-measurements.  The round-14 cross-DAY replicate above holds that
-band: per-subject spread across all three same-methodology runs is
-spans 0.65-0.81, winnow 0.71-0.78, scaled 0.67-0.73 (all <= 0.16),
-with only the frozen-K control exceeding it slightly (1.15-1.41,
-spread 0.26 — consistent with its flagged load sensitivity; its gap
-to the 2.1 red line remains >= 0.69).  Exponent deltas under ~0.2
-are noise within AND across days; for k32 specifically allow ~0.3.
-
-RE-RUN CADENCE (round-14 verdict item 6 — stated so future rounds
-don't re-measure by reflex): with three same-methodology replicates
-banked across two days and every spread inside the noise band, the
-probe is NOT a per-round ritual.  Re-run it only when (a) a probed
+Exponent deltas under ~0.2 between runs of the same code are probe
+noise (~0.3 for the frozen-K control, whose quadratic 30x pair stage
+is the most load-sensitive subject).  Re-run the probe when a probed
 subject's implementation, its pair-join discipline
 (spread_for_pair_join / salting / df-cap constants), or the scale
-fixtures' replication scheme changes, or (b) the subject's sf1 bench
-slot leaves its multi-round band per bench.py's attribution rule —
-otherwise the banked exponents stand as the measured record.
+fixtures' replication scheme changes.
 
-The text-pair exponents are ~linear-in-corpus — the subquadratic
-claim the bench slots track, measured (all-pairs would read 2.0).
-The SemDeDup pair is the scaling law measured at identical points:
-frozen K=32 reads 1.21 (under its by-construction 2.0 pair-work
-exponent — the salted stage tracks the predicted sum-cluster^2 work,
-diluted by the linear train/assign share, with no degradation beyond
-it), while the K=isqrt(N) rule reads 0.67 — scaling K with the
-corpus buys back ~half an exponent at these points, exactly the
-regime the operating-point variant exists for.
+Each subject carries its own red line:
 
-The two SemDeDup subjects (round-12 verdict item 6 — the one pair
-stage whose salted sum-cluster^2 claim was argued, not measured) have
-DIFFERENT predicted exponents, so each probe entry carries its own
-red line:
-
+- ``llm_substring_spans``, ``llm_winnow_pairs`` — red line 1.8: the
+  spread_for_pair_join text pairs are claimed subquadratic (all-pairs
+  would read 2.0).
 - ``llm_semdedup_trained_k32`` — the frozen-K control.  The scale
   fixtures key-shift-replicate embedding VECTORS verbatim (only
   vec_id shifts), so cell assignment is identical per copy, every
@@ -222,19 +133,12 @@ def main() -> None:
     def timed(name: str, sf_dir: str, n_runs: int) -> tuple[float, int]:
         """(best-of-N noop-sink seconds, rows) for one query at one
         scale point.  The TIMED endpoint must be the noop sink, never
-        ``.count()``: Catalyst eliminates row-preserving subtrees under
-        a bare count — semdedup ends in a LEFT join against a
-        distinct-keyed side, and its count plan contains ZERO joins
-        (measured at the 30x point: count 5.7 s vs noop 26 s — the
-        count was skipping the pair stage this probe exists to
-        measure).  Rows still come from one ``.count()`` per point
-        (exact regardless of that elimination, and it runs FIRST so it
-        doubles as the warmup run the round-12 ADVICE asked for); the
-        timed noop runs are best-of-N at BOTH points, fixing the same
-        ADVICE's one-sided 30x noise bias.  Returns FULL-precision
-        seconds (round-13 ADVICE): rounding to 2 decimals here fed the
-        exponent quantized inputs (+/-0.005 s on a ~6 s point shifts
-        the exponent by ~0.01) — round only in the emitted JSON."""
+        ``.count()`` (module docstring).  Rows come from one
+        ``.count()`` per point, exact regardless of that elimination,
+        which runs FIRST so it doubles as the warmup run.  Returns
+        FULL-precision seconds: rounding here would feed the exponent
+        quantized inputs (+/-0.005 s on a ~6 s point shifts it by
+        ~0.01), so round only in the emitted JSON."""
         rows = qs[name](spark, sf_dir).count()  # rows + per-point warmup
         best = float("inf")
         for _ in range(n_runs):
