@@ -2,10 +2,17 @@
 
 The iterative-ML member of the engine's algorithm family (next to
 connected components and PageRank in operators/graph.py /
-queries/dblp.py) — and the trainer for the IVF coarse codebook
-(operators/similarity.py ivf_topk consumes exactly this kind of
-centroid table). No reference counterpart (the reference's closest
-ancestry is its iterative-MapReduce job chain, SURVEY.md §3).
+queries/dblp.py), and the one source of codebooks for the
+operators/similarity.py search and dedup operators. No reference
+counterpart (the reference's closest ancestry is its
+iterative-MapReduce job chain, SURVEY.md §3).
+
+Codebook contract: ``seed_centroids`` turns member ids into a
+quantized ``(cluster, c)`` table (cluster = the member's id), and
+``kmeans_train`` runs ``iters`` Lloyd iterations from exactly that
+table, so ``iters=0`` returns the seeds themselves. ``pq_codebook``
+trains one such table per subspace and stacks them as the
+``(m, code, bq)`` table product quantization consumes.
 
 Determinism contract: vectors are integer-quantized, distances are
 exact integer squared-L2, centroid updates are integer truncated
@@ -19,15 +26,16 @@ Scale: per iteration —
 - update: posexplode to (cluster, dim, val) then ONE partial-agg
   groupBy over K*dim cells and a K-row rebuild. The classic
   MapReduce k-means, K*dim tiny vs corpus.
-Fixed small iteration counts keep lineage shallow (no checkpoint);
-unbounded fixpoints use the localCheckpoint pattern in graph.py.
+Each iteration's K-row centroid table is locally checkpointed, so
+downstream consumers never re-run the training chain.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import quantize
@@ -39,6 +47,12 @@ def dist2_q(a, b):
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
+    )
+
+
+def _quantized(corpus: DataFrame, id_col: str, vec_col: str, scale: int) -> DataFrame:
+    return corpus.select(
+        F.col(id_col).alias("vid"), quantize(F.col(vec_col), scale).alias("q")
     )
 
 
@@ -61,6 +75,22 @@ def _assign(q: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
+def seed_centroids(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    ids: Sequence[int],
+    scale: int = 1000,
+) -> DataFrame:
+    """The seed codebook: the quantized vectors of the ``ids`` members
+    as a (cluster, c) table, cluster = member id. A filter and a
+    projection: no shuffle, no persist, nothing runs until a consumer
+    does."""
+    return corpus.filter(F.col(id_col).isin(list(ids))).select(
+        F.col(id_col).alias("cluster"), quantize(F.col(vec_col), scale).alias("c")
+    )
+
+
 def kmeans_train(
     corpus: DataFrame,
     id_col: str,
@@ -69,11 +99,12 @@ def kmeans_train(
     iters: int = 2,
     scale: int = 1000,
 ) -> DataFrame:
-    """Run `iters` Lloyd iterations from centroids seeded at
-    `init_ids`; returns the trained quantized centroid table
-    (cluster, c) — the coarse codebook consumed by
-    similarity.semdedup / similarity.ivf_topk in place of their
-    seeded-by-id centroid rows."""
+    """Run `iters` Lloyd iterations from seed_centroids(init_ids);
+    returns the trained quantized centroid table (cluster, c). At
+    iters=0 that is the seed table itself."""
+    cents = seed_centroids(corpus, id_col, vec_col, init_ids, scale)
+    if iters == 0:
+        return cents
     # Spread + pin the quantized corpus for the duration of training:
     # every Lloyd iteration re-reads it (assignment + update), the
     # per-iteration centroid checkpoint makes each iteration an
@@ -82,16 +113,7 @@ def kmeans_train(
     # One explicit shuffle to shuffle.partitions + a persist bounds
     # the rescans to one; unpersisted before returning.
     n_shuffle = int(corpus.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    q = (
-        corpus.select(
-            F.col(id_col).alias("vid"), quantize(F.col(vec_col), scale).alias("q")
-        )
-        .repartition(n_shuffle)
-        .persist()
-    )
-    cents = q.filter(F.col("vid").isin(list(init_ids))).select(
-        F.col("vid").alias("cluster"), F.col("q").alias("c")
-    )
+    q = _quantized(corpus, id_col, vec_col, scale).repartition(n_shuffle).persist()
     for _ in range(iters):
         # materialize the K-row table per iteration: each Lloyd step
         # is a natural barrier, and without the cut every DOWNSTREAM
@@ -104,6 +126,37 @@ def kmeans_train(
         cents = _update_centroids(_assign(q, cents)).localCheckpoint(eager=True)
     q.unpersist()
     return cents
+
+
+def pq_codebook(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    init_ids: Sequence[int],
+    n_sub: int,
+    iters: int = 2,
+    scale: int = 1000,
+) -> DataFrame:
+    """Per-subspace product-quantization codebook (m, code, bq): for
+    each of the ``n_sub`` equal slices of the vector, kmeans_train over
+    that slice from the ``init_ids`` members; code = the seed's
+    position in ``init_ids``. Slicing commutes with elementwise
+    quantization, so the sub-centroids live in exactly the space
+    similarity.pq_adc_topk measures distances in."""
+    sd = (F.size(vec_col) / n_sub).cast("int")
+    code = F.array_position(F.array(*[F.lit(i) for i in init_ids]), F.col("cluster")) - 1
+    books = [
+        kmeans_train(
+            corpus.select(id_col, F.slice(vec_col, sd * m + 1, sd).alias(vec_col)),
+            id_col,
+            vec_col,
+            init_ids,
+            iters,
+            scale,
+        ).select(F.lit(m).alias("m"), code.cast("int").alias("code"), F.col("c").alias("bq"))
+        for m in range(n_sub)
+    ]
+    return reduce(DataFrame.unionAll, books)
 
 
 def _update_centroids(assigned: DataFrame) -> DataFrame:
@@ -137,9 +190,7 @@ def kmeans_assign(
     exact integer distances, ties to the lower cluster id. Returns
     (id_col, cluster) — the consumer-facing assignment surface used
     by compositions like llm_cluster_top_terms."""
-    q = corpus.select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col), scale).alias("q")
-    )
+    q = _quantized(corpus, id_col, vec_col, scale)
     return _assign(q, centroids).select(F.col("vid").alias(id_col), "cluster")
 
 
@@ -154,9 +205,7 @@ def kmeans_fixed(
     """Run `iters` Lloyd iterations from centroids seeded at
     `init_ids`; returns the final per-cluster summary
     (cluster, n_members, sse, min_member) — all exact integers."""
-    q = corpus.select(
-        F.col(id_col).alias("vid"), quantize(F.col(vec_col), scale).alias("q")
-    )
+    q = _quantized(corpus, id_col, vec_col, scale)
     cents = kmeans_train(corpus, id_col, vec_col, init_ids, iters, scale)
     final = _assign(q, cents)
     return final.groupBy("cluster").agg(

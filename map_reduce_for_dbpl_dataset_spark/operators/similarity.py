@@ -1,20 +1,34 @@
-"""Similarity search over embedding columns (LLM-pipeline extension).
+"""Similarity search and semantic dedup over embedding columns
+(LLM-pipeline extension).
 
-Two paths:
-
+Exact scans:
 - brute_force_topk: exact quantized-cosine top-k. The query set is
   broadcast (it is small by construction); the corpus never shuffles
   — each partition scores its slice and WindowGroupLimit keeps k rows
-  per query before the exchange. This is the correct baseline and the
-  right plan up to ~10^7 corpus rows per executor-core batch.
+  per query before the exchange. The correct baseline and the right
+  plan up to ~10^7 corpus rows per executor-core batch.
+- hard_negative_topk: the same plan with a label-inequality join
+  condition (contrastive hard-negative mining).
 
-- lsh_ann_topk: random-hyperplane LSH. Plane coefficients are
-  deterministic integers derived from an LCG (portable to the DuckDB
-  oracle); bucket = sign-bit string of the plane dot products.
-  Candidates = same bucket as the query (single-probe), ranked by
-  exact quantized cosine. Sub-linear scan at the cost of recall —
-  the scale path for 100 TB corpora, where the bucket join replaces
-  the full scan with a shuffle on bucket ids.
+Hashed buckets (random-hyperplane LSH; plane coefficients are
+deterministic integers from an LCG, portable to the DuckDB oracle;
+bucket = sign-bit string of the plane dot products):
+- lsh_ann_topk: candidates = the query's bucket (single-probe),
+  ranked by exact quantized cosine. The bucket join replaces the full
+  scan with a shuffle on bucket ids.
+- embedding_near_pairs: the all-pairs analog, a bucket self-join.
+
+Codebooks:
+- ivf_topk: inverted-file ANN over the cells of a coarse codebook.
+- pq_adc_topk: product-quantization ANN with asymmetric distances.
+- semdedup: within-cell near-duplicate removal (SemDeDup).
+
+Codebook contract: ivf_topk and semdedup take a quantized
+``(cluster, c)`` table, pq_adc_topk an ``(m, code, bq)`` table. Both
+come from operators/kmeans.py: a seeded codebook is
+``kmeans_train(..., iters=0)`` (or ``seed_centroids``), a trained one
+the same call with iterations, and ``pq_codebook`` stacks per-subspace
+tables.
 """
 
 from __future__ import annotations
@@ -229,10 +243,9 @@ def semdedup(
     corpus: DataFrame,
     id_col: str,
     vec_col: str,
-    centroid_ids: list[int] | None = None,
+    centroids: DataFrame,
     threshold: float = 0.95,
     scale: int = 1000,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Semantic deduplication (SemDeDup — Abbas, Tirumala, Simig,
     Ganguli, Morcos, "SemDeDup: Data-efficient learning at web-scale
@@ -244,10 +257,7 @@ def semdedup(
     Plan shape at 100 TB — the reason SemDeDup clusters at all:
     - assignment is a BROADCAST join against the K-row centroid table,
       argmax cosine with ties to the lower cell. The corpus never
-      shuffles for this. The codebook is either seeded by member id
-      (``centroid_ids``) or a trained quantized (cluster, c) table
-      (``centroids`` — e.g. operators/kmeans.py kmeans_train output,
-      the composition llm_semdedup_trained demonstrates).
+      shuffles for this. ``centroids`` is the (cluster, c) codebook.
     - the near-dup search shuffles once on cluster id, and the
       pairwise work is sum over clusters of |cluster|^2 — the whole
       point vs the corpus^2 all-pairs scan. Hot clusters are ordinary
@@ -260,26 +270,14 @@ def semdedup(
     Determinism: quantized integer dot/norm (functions/vectors.py),
     cosine as a single double expression — bit-identical to DuckDB.
     Output: (id_col, cluster, kept)."""
-    if (centroid_ids is None) == (centroids is None):
-        raise ValueError("pass exactly one of centroid_ids / centroids")
     c = _semdedup_corpus(corpus, id_col, vec_col, scale)
-    if centroids is not None:
-        cents = centroids.select(
-            F.col("cluster").alias("_cell"),
-            F.col("c").alias("_kq"),
-            norm2_q(F.col("c")).alias("_kn2"),
-        )
-    else:
-        cents = c.filter(F.col("_id").isin(list(centroid_ids))).select(
-            F.col("_id").alias("_cell"), F.col("_q").alias("_kq"), F.col("_n2").alias("_kn2")
-        )
     # lineage cut (lazy, graph.py pattern): the assignment feeds
     # THREE consumers (both sides of the within-cluster pair join and
     # the final labeling join) — without it the broadcast centroid
     # scoring re-executes per consumer. The pre-checkpoint plan is
     # audited via _semdedup_assigned (tools/plan_audit.py
     # semdedup_assign[pre-checkpoint]).
-    assigned = _semdedup_assigned(c, cents).localCheckpoint(eager=False)
+    assigned = _semdedup_assigned(c, centroids).localCheckpoint(eager=False)
     # Within-cluster pair enumeration, SALTED: a bare join on cluster
     # id has as many shuffle keys as clusters, and AQE coalesces that
     # exchange by its (tiny) INPUT size — blind to the quadratic
@@ -344,11 +342,11 @@ def _semdedup_corpus(
     )
 
 
-def _semdedup_assigned(c: DataFrame, cents: DataFrame) -> DataFrame:
+def _semdedup_assigned(c: DataFrame, centroids: DataFrame) -> DataFrame:
     """SemDeDup cell assignment: argmax cosine against the K-row
-    codebook, ties to the lower cell — as ONE Arrow-batched numpy
-    matmul per input batch (mapInPandas), not a per-row JVM
-    expression over an N*K joined table.
+    (cluster, c) codebook, ties to the lower cell — as ONE
+    Arrow-batched numpy matmul per input batch (mapInPandas), not a
+    per-row JVM expression over an N*K joined table.
 
     Why: dense embedding scoring is a matrix multiply.  The
     expression form (broadcast join + per-row higher-order-function
@@ -363,9 +361,9 @@ def _semdedup_assigned(c: DataFrame, cents: DataFrame) -> DataFrame:
     the task closure, each batch computes B x K scores locally, and
     one row per input row comes out.
 
-    Exactness: quantized dots are int64 matmul (exact); cosine =
-    dot / sqrt(n2a * kn2) evaluated in float64 — bit-identical to
-    the JVM/DuckDB double expression (products stay below 2^53, and
+    Exactness: quantized dots and centroid norms are int64 (exact);
+    cosine = dot / sqrt(n2a * kn2) evaluated in float64 — bit-identical
+    to the JVM/DuckDB double expression (products stay below 2^53, and
     IEEE division/sqrt are correctly rounded everywhere).  Cells are
     sorted ascending so numpy's first-max argmax IS the lower-cell
     tie-break; an exact cosine tie between distinct cells requires
@@ -375,10 +373,10 @@ def _semdedup_assigned(c: DataFrame, cents: DataFrame) -> DataFrame:
     class; K is bounded (codebook), never corpus-scale."""
     import numpy as np
 
-    crows = sorted((r["_cell"], r["_kq"], r["_kn2"]) for r in cents.collect())
+    crows = sorted((r["cluster"], r["c"]) for r in centroids.collect())
     cells = np.array([r[0] for r in crows], dtype=np.int64)
     ck_t = np.array([r[1] for r in crows], dtype=np.int64).T  # dim x K
-    kn2 = np.array([r[2] for r in crows], dtype=np.float64)
+    kn2 = (ck_t * ck_t).sum(axis=0).astype(np.float64)
 
     def assign(batches):
         import pandas as pd
@@ -444,12 +442,9 @@ def ivf_topk(
     vec_col: str,
     query_id_col: str,
     centroids: DataFrame,
-    centroid_id_col: str,
     k: int = 3,
     n_probe: int = 2,
     scale: int = 1000,
-    centroid_vec_col: str | None = None,
-    centroids_pre_quantized: bool = False,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: partition the corpus into cells by
     nearest centroid, then search only the ``n_probe`` cells nearest
@@ -463,19 +458,13 @@ def ivf_topk(
     size is corpus/n_cells * n_probe per query. Hot cells (Zipfian
     data) are AQE skew-split; more centroids shrink cells.
 
-    The codebook is either raw vectors in ``vec_col`` (seeded member
-    rows) or, with ``centroid_vec_col``/``centroids_pre_quantized``,
-    an already-quantized trained table — e.g. operators/kmeans.py
-    kmeans_train (cluster, c) output, as llm_ann_ivf_trained
-    demonstrates.
+    ``centroids`` is the (cluster, c) codebook; each cluster is a cell.
 
     Determinism: all scoring on quantized integer vectors (exact),
     ties broken by id — bit-identical to the DuckDB oracle.
     """
-    cvec = F.col(centroid_vec_col or vec_col)
-    kq = cvec if centroids_pre_quantized else quantize(cvec, scale)
     cents = centroids.select(
-        F.col(centroid_id_col).alias("_cell"), kq.alias("_kq")
+        F.col("cluster").alias("_cell"), F.col("c").alias("_kq")
     ).withColumn("_kn2", norm2_q(F.col("_kq")))
 
     def nearest_cells(df: DataFrame, idc: str, out_id: str, n: int) -> DataFrame:
@@ -519,11 +508,10 @@ def pq_adc_topk(
     id_col: str,
     vec_col: str,
     query_id_col: str,
-    codeword_ids: list[int] | None = None,
+    codebook: DataFrame,
     n_sub: int = 4,
     k: int = 3,
     scale: int = 1000,
-    codebook: DataFrame | None = None,
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
     (Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor
@@ -531,10 +519,7 @@ def pq_adc_topk(
 
     The vector space is split into ``n_sub`` subspaces; each corpus
     subvector is ENCODED as the id of its nearest per-subspace
-    codeword. The codebook rows are either the subvectors of the
-    ``codeword_ids`` vectors (seeded) or a TRAINED quantized
-    (m, code, bq) table via ``codebook`` — per-subspace
-    operators/kmeans.py output, as llm_ann_pq_trained demonstrates.
+    codeword in ``codebook``, the quantized (m, code, bq) table.
     A query never touches corpus vectors: it precomputes a
     (subspace, code) -> partial-d2 lookup table and scores every
     corpus row as the SUM of n_sub table lookups.
@@ -560,8 +545,8 @@ def pq_adc_topk(
         # Quantize in a SEPARATE projection (referenced n_sub + 1
         # times, so CollapseProject keeps it one per-row evaluation):
         # inlined, the quantize transform would re-run once per
-        # subspace slice inside the explode's array constructor (the
-        # round-21 Generate-planning finding, OPTIMIZATION_r21.md).
+        # subspace slice inside the explode's array constructor, since
+        # Generate planning does not share it across the slices.
         qdf = df.select(
             F.col(idc).alias(out), quantize(F.col(vec_col), scale).alias("_qv")
         )
@@ -580,23 +565,7 @@ def pq_adc_topk(
             out, "p.m", "p.sq"
         )
 
-    if (codeword_ids is None) == (codebook is None):
-        raise ValueError("pass exactly one of codeword_ids / codebook")
-    if codebook is not None:
-        book = codebook.select("m", "code", "bq")
-    else:
-        # codebook: (m, code, bq); code = position in codeword_ids
-        code_expr = F.col("_cwid")
-        mapping = F.lit(None).cast("int")
-        for idx, cid in enumerate(codeword_ids):
-            mapping = F.when(code_expr == cid, idx).otherwise(mapping)
-        book = (
-            _subs(
-                corpus.filter(F.col(id_col).isin(list(codeword_ids))), id_col, "_cwid"
-            )
-            .withColumn("code", mapping)
-            .select("m", "code", F.col("sq").alias("bq"))
-        )
+    book = codebook.select("m", "code", "bq")
 
     codes = (
         _subs(corpus, id_col, "nid")

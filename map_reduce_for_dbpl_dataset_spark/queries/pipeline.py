@@ -22,8 +22,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import hash60, normalize_text, tokens, word_shingles
+from ..operators.kmeans import kmeans_assign, kmeans_fixed, kmeans_train, pq_codebook
 from ..operators.pairs import spread_for_pair_join
-from ..operators.similarity import ivf_topk, pq_adc_topk
+from ..operators.similarity import ivf_topk, pq_adc_topk, semdedup
 from ..sources.parquet import load_table
 from .llm import _SH_CTE, EMB_DIM, N_QUERY_VECS, _docs_shingled
 
@@ -317,18 +318,112 @@ FROM shm WHERE len(ss) > 0 ORDER BY doc_id
 """
 
 
+# --- k-means (iterative; trains the IVF, PQ and SemDeDup codebooks) ---------
+KMEANS_INIT_IDS = [30, 31, 32, 33]
+KMEANS_ITERS = 2
+
+
+def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-iteration Lloyd's k-means over the embeddings
+    (operators/kmeans.py): 2 exact integer iterations from fixed
+    seeds, reporting per-cluster size, integer SSE and min member —
+    the iterations that train the IVF, PQ and SemDeDup codebooks."""
+    e = load_table(spark, sf_dir, "embeddings")
+    return kmeans_fixed(
+        e, "vec_id", "embedding", KMEANS_INIT_IDS, iters=KMEANS_ITERS
+    ).orderBy("cluster")
+
+
+def _lloyd_assign(prefix: str, t: int, dim: int) -> str:
+    """Lloyd assignment CTE {prefix}a{t}: the nearest {prefix}c{t-1}
+    centroid of every {prefix}q row (exact integer d2, ties to the
+    lower cluster)."""
+    d2 = (
+        f"CAST(list_sum([(a.q[i]-c.c[i])*(a.q[i]-c.c[i]) "
+        f"for i in range(1, {dim + 1})]) AS BIGINT)"
+    )
+    return f"""
+{prefix}a{t} AS (
+  SELECT vid, q, cluster, d2 FROM (
+    SELECT *, row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, cluster ASC) AS rn
+    FROM (SELECT a.vid, a.q, c.cluster, {d2} AS d2 FROM {prefix}q a CROSS JOIN {prefix}c{t - 1} c))
+  WHERE rn = 1
+)"""
+
+
+def _kmeans_prelude(
+    iters: int,
+    prefix: str = "k",
+    ids: list[int] | None = None,
+    dim: int | None = None,
+    vec_expr: str | None = None,
+    src_pred: str | None = None,
+    c0_sql: str | None = None,
+) -> str:
+    """The oracle twin of operators/kmeans.py kmeans_train: the
+    quantized corpus {prefix}q, the seed table {prefix}c0 and ``iters``
+    unrolled Lloyd iterations ending in the codebook {prefix}c{iters}
+    ({prefix}-named so several chains can share one WITH).  At
+    iters=0 the codebook is the seed table itself.  ``vec_expr``
+    replaces the embedding column (a list slice per PQ subspace);
+    ``src_pred`` restricts the TRAINING corpus (a WHERE over the raw
+    embeddings scan — llm_semdedup_scaled's bounded sample);
+    ``c0_sql`` replaces the whole seed-select body (its data-
+    dependent ORDER BY vid LIMIT k seeding)."""
+    ids_s = ", ".join(str(i) for i in (KMEANS_INIT_IDS if ids is None else ids))
+    src_where = f"\n  WHERE {src_pred}" if src_pred else ""
+    dim = EMB_DIM if dim is None else dim
+    vec = vec_expr or "embedding"
+    update = """
+{P}pd{t} AS (
+  SELECT cluster, u.i AS dim, sum(q[u.i]) AS s, count(*) AS n
+  FROM {P}a{t} CROSS JOIN LATERAL (SELECT unnest(range(1, {dplus})) AS i) u
+  GROUP BY cluster, u.i
+),
+{P}c{t} AS (SELECT cluster, list(s // n ORDER BY dim) AS c FROM {P}pd{t} GROUP BY cluster)"""
+    parts = []
+    for t in range(1, iters + 1):
+        parts.append(_lloyd_assign(prefix, t, dim))
+        parts.append(update.format(t=t, dplus=dim + 1, P=prefix))
+    c0_body = (
+        c0_sql
+        if c0_sql is not None
+        else f"SELECT vid AS cluster, q AS c FROM {prefix}q WHERE vid IN ({ids_s})"
+    )
+    return f"""{prefix}q AS (
+  SELECT vec_id AS vid,
+         [CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in {vec}] AS q
+  FROM embeddings{src_where}
+),
+{prefix}c0 AS ({c0_body}){"".join("," + p for p in parts)}"""
+
+
+def _kmeans_sql() -> str:
+    final = KMEANS_ITERS + 1
+    return f"""
+WITH {_kmeans_prelude(KMEANS_ITERS)},{_lloyd_assign("k", final, EMB_DIM)}
+SELECT cluster, count(*) AS n_members, sum(d2)::BIGINT AS sse, min(vid) AS min_member
+FROM ka{final} GROUP BY cluster ORDER BY cluster
+"""
+
+
 # --- IVF ANN -----------------------------------------------------------------
-# Coarse "codebook": the vectors right after the query range act as
-# fixed centroids (a real pipeline trains k-means; the layout and
-# joins are identical).
+# Coarse codebook: seeded at the 8 vectors right after the query range
+# (llm_ann_ivf), or trained from the llm_kmeans seeds
+# (llm_ann_ivf_trained); the layout and joins are identical.
 IVF_CENTROID_IDS = list(range(N_QUERY_VECS, N_QUERY_VECS + 8))
 IVF_N_PROBE = 2
 
 
-def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-partitioned ANN (see operators/similarity.py ivf_topk):
-    assign every vector to its nearest centroid cell, probe the 2
-    nearest cells per query, exact-rank within the probed cells."""
+def _ann_ivf(
+    spark: SparkSession, sf_dir: str, init_ids: list[int], iters: int
+) -> DataFrame:
+    """IVF-partitioned ANN (see operators/similarity.py ivf_topk) over
+    the kmeans_train codebook from ``init_ids`` after ``iters`` Lloyd
+    iterations: assign every vector to its nearest centroid cell, probe
+    the IVF_N_PROBE nearest cells per query, exact-rank within the
+    probed cells. The K-row codebook broadcasts for assignment and
+    probing; the only shuffle is the cell-id candidate join."""
     e = load_table(spark, sf_dir, "embeddings")
     return ivf_topk(
         corpus=e,
@@ -336,28 +431,37 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="vec_id",
         vec_col="embedding",
         query_id_col="vec_id",
-        centroids=e.filter(F.col("vec_id").isin(IVF_CENTROID_IDS)),
-        centroid_id_col="vec_id",
+        centroids=kmeans_train(e, "vec_id", "embedding", init_ids, iters),
         k=3,
         n_probe=IVF_N_PROBE,
     ).orderBy("query_id", "neighbor_id")
+
+
+def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN over the seeded codebook (no Lloyd iterations)."""
+    return _ann_ivf(spark, sf_dir, IVF_CENTROID_IDS, 0)
+
+
+def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN over a trained codebook: the same exact-integer Lloyd
+    iterations from the same seeds as llm_kmeans."""
+    return _ann_ivf(spark, sf_dir, KMEANS_INIT_IDS, KMEANS_ITERS)
 
 
 _IVF_QUANT = "[CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding]"
 _IVF_DOT = f"CAST(list_sum([a.q[i] * c.kq[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)"
 
 
-def _ivf_sql() -> str:
-    ids = ", ".join(str(i) for i in IVF_CENTROID_IDS)
+def _ivf_sql(ids: list[int], iters: int) -> str:
     return f"""
-WITH q0 AS (
-  SELECT vec_id, {_IVF_QUANT} AS q FROM embeddings
-),
+WITH {_kmeans_prelude(iters, ids=ids)},
 n AS (
-  SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
+  SELECT vid AS vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM kq
 ),
 cents AS (
-  SELECT vec_id AS cell, q AS kq, n2 AS kn2 FROM n WHERE vec_id IN ({ids})
+  SELECT cluster AS cell, c AS kq,
+         CAST(list_sum([x * x for x in c]) AS BIGINT) AS kn2
+  FROM kc{iters}
 ),
 assign0 AS (
   SELECT a.vec_id, a.q, a.n2, c.cell,
@@ -388,18 +492,22 @@ FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id
 
 
 # --- PQ / ADC ANN ------------------------------------------------------------
-# Per-subspace codebook rows: the 4 vectors after the IVF centroids
-# act as fixed codewords (a production pipeline trains them per
-# subspace with operators/kmeans.py; encode/search joins identical).
+# Per-subspace codebook: seeded at the 4 vectors after the IVF
+# centroids (llm_ann_pq), or trained per subspace from the same seeds
+# (llm_ann_pq_trained); encode/search joins identical.
 PQ_CODEWORD_IDS = list(range(N_QUERY_VECS + 8, N_QUERY_VECS + 12))
 PQ_N_SUB = 4
 
 
-def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ann_pq(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
     """Product-quantization ANN with ADC scoring (see
-    operators/similarity.py pq_adc_topk): corpus rows collapse to
-    4 two-bit codes; queries precompute a (subspace, code) lookup
-    table and rank the whole corpus by 4 table lookups per row."""
+    operators/similarity.py pq_adc_topk) over the operators/kmeans.py
+    pq_codebook seeded at PQ_CODEWORD_IDS after ``iters`` Lloyd
+    iterations per subspace: corpus rows collapse to 4 two-bit codes;
+    queries precompute a (subspace, code) lookup table and rank the
+    whole corpus by 4 table lookups per row. The K*n_sub-row codebook
+    broadcasts for encode and LUT build; the corpus never shuffles
+    until the final per-query top-k."""
     e = load_table(spark, sf_dir, "embeddings")
     return pq_adc_topk(
         corpus=e,
@@ -407,21 +515,47 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         id_col="vec_id",
         vec_col="embedding",
         query_id_col="vec_id",
-        codeword_ids=PQ_CODEWORD_IDS,
+        codebook=pq_codebook(e, "vec_id", "embedding", PQ_CODEWORD_IDS, PQ_N_SUB, iters),
         n_sub=PQ_N_SUB,
         k=3,
     ).orderBy("query_id", "neighbor_id")
 
 
-def _pq_sql() -> str:
+def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PQ ANN over the seeded codebook (no Lloyd iterations)."""
+    return _ann_pq(spark, sf_dir, 0)
+
+
+def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PQ ANN over a codebook trained per subspace with the llm_kmeans
+    iteration count."""
+    return _ann_pq(spark, sf_dir, KMEANS_ITERS)
+
+
+def _pq_sql(iters: int) -> str:
     sub_dim = EMB_DIM // PQ_N_SUB
     case = " ".join(
         f"WHEN {cid} THEN {idx}" for idx, cid in enumerate(PQ_CODEWORD_IDS)
     )
-    ids = ", ".join(str(i) for i in PQ_CODEWORD_IDS)
     d2 = f"list_sum([(s.sq[i] - b.bq[i]) * (s.sq[i] - b.bq[i]) for i in range(1, {sub_dim + 1})])"
+    preludes = ",\n".join(
+        _kmeans_prelude(
+            iters,
+            prefix=f"s{m}",
+            ids=PQ_CODEWORD_IDS,
+            dim=sub_dim,
+            vec_expr=f"embedding[{m * sub_dim + 1}:{(m + 1) * sub_dim}]",
+        )
+        for m in range(PQ_N_SUB)
+    )
+    book_union = "\n  UNION ALL\n".join(
+        f"  SELECT {m} AS m, CASE cluster {case} END AS code, c AS bq "
+        f"FROM s{m}c{iters}"
+        for m in range(PQ_N_SUB)
+    )
     return f"""
-WITH q0 AS (
+WITH {preludes},
+q0 AS (
   SELECT vec_id, {_IVF_QUANT} AS q FROM embeddings
 ),
 ms AS (SELECT unnest([{", ".join(str(m) for m in range(PQ_N_SUB))}]) AS m),
@@ -430,8 +564,7 @@ subs AS (
   FROM q0 CROSS JOIN ms
 ),
 book AS (
-  SELECT m, CASE vec_id {case} END AS code, sq AS bq
-  FROM subs WHERE vec_id IN ({ids})
+{book_union}
 ),
 enc AS (
   SELECT s.vec_id AS nid, s.m, b.code, {d2} AS d2
@@ -547,8 +680,11 @@ QUERIES = {
     "llm_domain_mixture": q_domain_mixture,
     "llm_sequence_pack": q_sequence_pack,
     "llm_repetition": q_repetition,
+    "llm_kmeans": q_kmeans,
     "llm_ann_ivf": q_ann_ivf,
+    "llm_ann_ivf_trained": q_ann_ivf_trained,
     "llm_ann_pq": q_ann_pq,
+    "llm_ann_pq_trained": q_ann_pq_trained,
 }
 
 ORACLE_SQL = {
@@ -558,68 +694,12 @@ ORACLE_SQL = {
     "llm_domain_mixture": SQL_DOMAIN_MIXTURE,
     "llm_sequence_pack": SQL_SEQUENCE_PACK,
     "llm_repetition": SQL_REPETITION,
-    "llm_ann_ivf": _ivf_sql(),
-    "llm_ann_pq": _pq_sql(),
+    "llm_kmeans": _kmeans_sql(),
+    "llm_ann_ivf": _ivf_sql(IVF_CENTROID_IDS, 0),
+    "llm_ann_ivf_trained": _ivf_sql(KMEANS_INIT_IDS, KMEANS_ITERS),
+    "llm_ann_pq": _pq_sql(0),
+    "llm_ann_pq_trained": _pq_sql(KMEANS_ITERS),
 }
-
-
-# --- k-means (iterative, trains the IVF codebook) ----------------------------
-KMEANS_INIT_IDS = [30, 31, 32, 33]
-KMEANS_ITERS = 2
-
-
-def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-iteration Lloyd's k-means over the embeddings
-    (operators/kmeans.py): 2 exact integer iterations from fixed
-    seeds, reporting per-cluster size, integer SSE and min member —
-    the trainer for the IVF coarse codebook used by llm_ann_ivf."""
-    from ..operators.kmeans import kmeans_fixed
-
-    e = load_table(spark, sf_dir, "embeddings")
-    return kmeans_fixed(
-        e, "vec_id", "embedding", KMEANS_INIT_IDS, iters=KMEANS_ITERS
-    ).orderBy("cluster")
-
-
-def _kmeans_sql() -> str:
-    ids = ", ".join(str(i) for i in KMEANS_INIT_IDS)
-    d2 = (
-        f"CAST(list_sum([(a.q[i]-c.c[i])*(a.q[i]-c.c[i]) "
-        f"for i in range(1, {EMB_DIM + 1})]) AS BIGINT)"
-    )
-    assign = """
-a{t} AS (
-  SELECT vid, q, cluster, d2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, cluster ASC) AS rn
-    FROM (SELECT a.vid, a.q, c.cluster, {d2} AS d2 FROM q0 a CROSS JOIN c{p} c))
-  WHERE rn = 1
-)"""
-    update = """
-pd{t} AS (
-  SELECT cluster, u.i AS dim, sum(q[u.i]) AS s, count(*) AS n
-  FROM a{t} CROSS JOIN LATERAL (SELECT unnest(range(1, {dplus})) AS i) u
-  GROUP BY cluster, u.i
-),
-c{t} AS (SELECT cluster, list(s // n ORDER BY dim) AS c FROM pd{t} GROUP BY cluster)"""
-    parts = []
-    for t in range(1, KMEANS_ITERS + 1):
-        parts.append(assign.format(t=t, p=t - 1, d2=d2))
-        parts.append(update.format(t=t, dplus=EMB_DIM + 1))
-    final = assign.format(t=KMEANS_ITERS + 1, p=KMEANS_ITERS, d2=d2)
-    return f"""
-WITH q0 AS (
-  SELECT vec_id AS vid,
-         [CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding] AS q
-  FROM embeddings
-),
-c0 AS (SELECT vid AS cluster, q AS c FROM q0 WHERE vid IN ({ids})),{",".join(parts)},{final}
-SELECT cluster, count(*) AS n_members, sum(d2)::BIGINT AS sse, min(vid) AS min_member
-FROM a{KMEANS_ITERS + 1} GROUP BY cluster ORDER BY cluster
-"""
-
-
-QUERIES["llm_kmeans"] = q_kmeans
-ORACLE_SQL["llm_kmeans"] = _kmeans_sql()
 
 
 # --- line-level boilerplate removal (third batch: corpus curation) -----------
@@ -988,19 +1068,18 @@ QUERIES["llm_dedup_incremental"] = q_dedup_incremental
 ORACLE_SQL["llm_dedup_incremental"] = SQL_DEDUP_INCREMENTAL
 
 
-# --- semantic dedup (round-4 batch: curation beyond n-gram identity) ----------
+# --- semantic dedup (curation beyond n-gram identity) ------------------------
 # SemDeDup threshold: the planted near-dups (exact copies cos=1.0,
 # every-4th-halved copies cos~0.97) sit far above it; unrelated fixture
 # vectors top out ~0.51 — a wide deterministic margin on both sides.
 SEMDEDUP_THRESHOLD = 0.9
-SEMDEDUP_CENTROID_IDS = [30, 31, 32, 33]
 
 
 def _augmented_embeddings(e: DataFrame) -> DataFrame:
-    """Deterministic near-dup planting (shared by llm_dedup_embedding /
-    llm_semdedup / llm_semdedup_trained): exact copies at +100000 and
-    every-4th-element-halved copies at +200000 — the raw fixture has
-    no natural near-identical vectors."""
+    """Deterministic near-dup planting (shared by the llm_semdedup
+    family): exact copies at +100000 and every-4th-element-halved
+    copies at +200000 — the raw fixture has no natural near-identical
+    vectors."""
     seeds = e.filter(F.col("vec_id") < 10)
     exact = seeds.select((F.col("vec_id") + 100000).alias("vec_id"), "embedding")
     half4 = F.transform(
@@ -1013,25 +1092,31 @@ def _augmented_embeddings(e: DataFrame) -> DataFrame:
     return e.unionAll(exact).unionAll(near)
 
 
-def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup over the augmented embedding corpus (same deterministic
-    augmentation as llm_dedup_embedding: exact copies at +100000 and
-    every-4th-element-halved copies at +200000 plant near-dups the raw
-    fixture lacks): coarse-cluster by broadcast centroid assignment,
-    then keep one representative per within-cluster epsilon-group
-    (operators/similarity.py semdedup). Output is the full labeling
-    (vec_id, cluster, kept) so the oracle checks survivors AND drops."""
-    from ..operators.similarity import semdedup
-
+def _semdedup(
+    spark: SparkSession, sf_dir: str, init_ids: list[int], iters: int
+) -> DataFrame:
+    """SemDeDup (operators/similarity.py semdedup) over the augmented
+    embedding corpus, with the kmeans_train codebook from ``init_ids``
+    after ``iters`` Lloyd iterations over the raw embeddings: coarse-
+    cluster by broadcast centroid assignment, then keep one
+    representative per within-cluster epsilon-group. Output is the
+    full labeling (vec_id, cluster, kept) so the oracle checks
+    survivors AND drops."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    corpus = _augmented_embeddings(e)
+    cents = kmeans_train(e, "vec_id", "embedding", init_ids, iters)
     return semdedup(
-        corpus,
+        _augmented_embeddings(e),
         "vec_id",
         "embedding",
-        SEMDEDUP_CENTROID_IDS,
+        cents,
         threshold=SEMDEDUP_THRESHOLD,
     ).orderBy("vec_id")
+
+
+def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup over the codebook seeded at the llm_kmeans seeds (no
+    Lloyd iterations)."""
+    return _semdedup(spark, sf_dir, KMEANS_INIT_IDS, 0)
 
 
 # SemDeDup's own scaling law: within-cluster pair work is sum of
@@ -1045,37 +1130,12 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_K32_IDS = list(range(30, 62))
 
 
-def _semdedup_trained(
-    spark: SparkSession, sf_dir: str, init_ids: list[int]
-) -> DataFrame:
-    from ..operators.kmeans import kmeans_train
-    from ..operators.similarity import semdedup
-
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = kmeans_train(e, "vec_id", "embedding", init_ids, iters=KMEANS_ITERS)
-    corpus = _augmented_embeddings(e)
-    return semdedup(
-        corpus,
-        "vec_id",
-        "embedding",
-        threshold=SEMDEDUP_THRESHOLD,
-        centroids=cents,
-    ).orderBy("vec_id")
-
-
 def q_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-then-assign composition (round-4 verdict #3): the SemDeDup
-    coarse codebook is TRAINED — operators/kmeans.py kmeans_train runs
-    the same 2 exact-integer Lloyd iterations as llm_kmeans over the
-    raw embeddings — and the trained (cluster, c) table replaces the
-    seeded-by-id centroid rows in operators/similarity.py semdedup.
-    Same broadcast-assignment plan shape (the K-row codebook broadcasts
-    whether seeded or trained); the oracle unrolls the training
-    iterations as CTEs (the llm_kmeans pattern) and feeds the final
-    centroid CTE into the semdedup SQL — exact hash equality end to
-    end, closing the 'production trains them' caveat with a live
-    demonstration."""
-    return _semdedup_trained(spark, sf_dir, KMEANS_INIT_IDS)
+    """SemDeDup over a trained codebook: the same exact-integer Lloyd
+    iterations from the same seeds as llm_kmeans. Same broadcast-
+    assignment plan shape as llm_semdedup (the K-row codebook
+    broadcasts whether seeded or trained)."""
+    return _semdedup(spark, sf_dir, KMEANS_INIT_IDS, KMEANS_ITERS)
 
 
 def q_semdedup_trained_k32(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1085,14 +1145,14 @@ def q_semdedup_trained_k32(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters, so the within-cluster pair stage carries ~1/8 the pairs
     across 8x more shuffle keys. This is the variant the bench times
     at the sf1 scale point."""
-    return _semdedup_trained(spark, sf_dir, SEMDEDUP_K32_IDS)
+    return _semdedup(spark, sf_dir, SEMDEDUP_K32_IDS, KMEANS_ITERS)
 
 
-# The K-selection rule itself, promoted from prose to code (round-5
-# verdict #4): K = clamp(isqrt(N), floor=8, cap=256) over the RAW
-# embedding count N.  With within-cluster pair work ~ N^2/K, an
-# isqrt K makes total pair work ~ N^1.5 — the operating point moves
-# with the corpus instead of being a hand-picked id list.  The cap
+# The K-selection rule itself: K = clamp(isqrt(N), floor=8, cap=256)
+# over the RAW embedding count N.  With within-cluster pair work
+# ~ N^2/K, an isqrt K makes total pair work ~ N^1.5 — the operating
+# point moves with the corpus instead of being a hand-picked id
+# list.  The cap
 # guards the fixture seed-id range (seeds come from the base key
 # block, which the scale fixtures keep contiguous in every copy
 # stride); production replaces the smallest-ids seeding with a
@@ -1139,9 +1199,6 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed list is an ORDER BY vid LIMIT k over the sample in both
     engines), so one static string stays hash-exact at every scale
     factor."""
-    from ..operators.kmeans import kmeans_train
-    from ..operators.similarity import semdedup
-
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = e.count()
     k = semdedup_scaled_k(n)
@@ -1159,27 +1216,39 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(k)
         .collect()
     ]
-    cents = kmeans_train(sample, "vec_id", "embedding", ids, iters=KMEANS_ITERS)
-    corpus = _augmented_embeddings(e)
+    cents = kmeans_train(sample, "vec_id", "embedding", ids, KMEANS_ITERS)
     return semdedup(
-        corpus,
+        _augmented_embeddings(e),
         "vec_id",
         "embedding",
+        cents,
         threshold=SEMDEDUP_THRESHOLD,
-        centroids=cents,
     ).orderBy("vec_id")
 
 
-def _semdedup_sql() -> str:
-    ids = ", ".join(str(i) for i in SEMDEDUP_CENTROID_IDS)
+def _semdedup_sql(
+    iters: int,
+    ids: list[int] | None = None,
+    extra_cte: str = "",
+    **prelude_kwargs,
+) -> str:
+    """llm_semdedup family oracle: the kmeans prelude after ``iters``
+    iterations feeding its codebook into the SemDeDup assignment and
+    pair search.  ``extra_cte`` prepends data-dependent scalar CTEs
+    (the _scaled variant's K/m) that the ``prelude_kwargs`` overrides
+    (src_pred / c0_sql) may reference."""
     dot = "CAST(list_sum([{a}.q[i] * {b}.q[i] for i in range(1, %d)]) AS DOUBLE)" % (
         EMB_DIM + 1
     )
-    cos = (
-        dot + " / sqrt(CAST({a}.n2 AS DOUBLE) * CAST({b}.n2 AS DOUBLE))"
-    )
+    cos = dot + " / sqrt(CAST({a}.n2 AS DOUBLE) * CAST({b}.n2 AS DOUBLE))"
     return f"""
-WITH base AS (
+WITH {extra_cte}{_kmeans_prelude(iters, ids=ids, **prelude_kwargs)},
+cents AS (
+  SELECT cluster AS cell, c AS q,
+         CAST(list_sum([x * x for x in c]) AS BIGINT) AS n2
+  FROM kc{iters}
+),
+base AS (
   SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings
 ),
 corpus AS (
@@ -1192,9 +1261,8 @@ corpus AS (
           for i in range(1, {EMB_DIM + 1})]
   FROM base WHERE vec_id < 10
 ),
-q0 AS (SELECT vec_id, [CAST(floor(x * 1000) AS BIGINT) for x in emb] AS q FROM corpus),
-n AS (SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0),
-cents AS (SELECT vec_id AS cell, q, n2 FROM n WHERE vec_id IN ({ids})),
+qs AS (SELECT vec_id, [CAST(floor(x * 1000) AS BIGINT) for x in emb] AS q FROM corpus),
+n AS (SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM qs),
 assigned AS (
   SELECT vec_id, q, n2, cell AS cluster FROM (
     SELECT a.vec_id, a.q, a.n2, c.cell,
@@ -1214,6 +1282,31 @@ SELECT a.vec_id, a.cluster, d.vec_id IS NULL AS kept
 FROM assigned a LEFT JOIN dominated d ON a.vec_id = d.vec_id
 ORDER BY a.vec_id
 """
+
+
+QUERIES["llm_semdedup"] = q_semdedup
+ORACLE_SQL["llm_semdedup"] = _semdedup_sql(0)
+QUERIES["llm_semdedup_trained"] = q_semdedup_trained
+ORACLE_SQL["llm_semdedup_trained"] = _semdedup_sql(KMEANS_ITERS)
+QUERIES["llm_semdedup_trained_k32"] = q_semdedup_trained_k32
+ORACLE_SQL["llm_semdedup_trained_k32"] = _semdedup_sql(KMEANS_ITERS, SEMDEDUP_K32_IDS)
+QUERIES["llm_semdedup_scaled"] = q_semdedup_scaled
+ORACLE_SQL["llm_semdedup_scaled"] = _semdedup_sql(
+    KMEANS_ITERS,
+    extra_cte=(
+        # k = clamp(isqrt(N), floor, cap); m = train-sample stride
+        f"kdef AS (SELECT k, greatest(1, n // ({SEMDEDUP_TRAIN_PER_CENTROID} * k)) AS m "
+        f"FROM (SELECT count(*) AS n, greatest({SEMDEDUP_SCALED_FLOOR}, "
+        f"least(CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT), "
+        f"{SEMDEDUP_SCALED_CAP})) AS k FROM embeddings)),\n"
+    ),
+    src_pred="vec_id % (SELECT m FROM kdef) = 0",
+    c0_sql=(
+        "SELECT vid AS cluster, q AS c FROM ("
+        f"SELECT vid, q FROM kq WHERE vid >= {SEMDEDUP_SCALED_BASE} "
+        "ORDER BY vid LIMIT (SELECT k FROM kdef))"
+    ),
+)
 
 
 # --- overlapping chunking (RAG / context-window prep) -------------------------
@@ -1389,327 +1482,6 @@ ORDER BY r.source, r.sample_rk
 """
 
 
-def _kmeans_prelude(
-    prefix: str = "k",
-    ids: list[int] | None = None,
-    dim: int | None = None,
-    vec_expr: str | None = None,
-    ids_pred: str | None = None,
-    src_pred: str | None = None,
-    c0_sql: str | None = None,
-) -> str:
-    """The llm_kmeans unrolled-iteration CTE chain ({prefix}-named to
-    avoid name capture), ending with the trained centroid table
-    {prefix}c{KMEANS_ITERS} — shared by the train-then-assign oracles
-    (llm_semdedup_trained, llm_ann_ivf_trained, and per-subspace with
-    ``vec_expr`` a list slice, llm_ann_pq_trained).  ``ids_pred``
-    replaces the static id list with a SQL predicate over ``vid``;
-    ``src_pred`` restricts the TRAINING corpus (a WHERE over the raw
-    embeddings scan — llm_semdedup_scaled's bounded sample);
-    ``c0_sql`` replaces the whole seed-select body (its data-
-    dependent ORDER BY vid LIMIT k seeding)."""
-    ids_s = ", ".join(str(i) for i in (KMEANS_INIT_IDS if ids is None else ids))
-    c0_where = ids_pred if ids_pred is not None else f"vid IN ({ids_s})"
-    src_where = f"\n  WHERE {src_pred}" if src_pred else ""
-    dim = EMB_DIM if dim is None else dim
-    vec = vec_expr or "embedding"
-    d2 = (
-        f"CAST(list_sum([(a.q[i]-c.c[i])*(a.q[i]-c.c[i]) "
-        f"for i in range(1, {dim + 1})]) AS BIGINT)"
-    )
-    assign = """
-{P}a{t} AS (
-  SELECT vid, q, cluster, d2 FROM (
-    SELECT *, row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, cluster ASC) AS rn
-    FROM (SELECT a.vid, a.q, c.cluster, {d2} AS d2 FROM {P}q a CROSS JOIN {P}c{p} c))
-  WHERE rn = 1
-)"""
-    update = """
-{P}pd{t} AS (
-  SELECT cluster, u.i AS dim, sum(q[u.i]) AS s, count(*) AS n
-  FROM {P}a{t} CROSS JOIN LATERAL (SELECT unnest(range(1, {dplus})) AS i) u
-  GROUP BY cluster, u.i
-),
-{P}c{t} AS (SELECT cluster, list(s // n ORDER BY dim) AS c FROM {P}pd{t} GROUP BY cluster)"""
-    parts = []
-    for t in range(1, KMEANS_ITERS + 1):
-        parts.append(assign.format(t=t, p=t - 1, d2=d2, P=prefix))
-        parts.append(update.format(t=t, dplus=dim + 1, P=prefix))
-    c0_body = (
-        c0_sql
-        if c0_sql is not None
-        else f"SELECT vid AS cluster, q AS c FROM {prefix}q WHERE {c0_where}"
-    )
-    return f"""{prefix}q AS (
-  SELECT vec_id AS vid,
-         [CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in {vec}] AS q
-  FROM embeddings{src_where}
-),
-{prefix}c0 AS ({c0_body}),{",".join(parts)}"""
-
-
-def _semdedup_trained_sql(
-    ids: list[int] | None = None,
-    extra_cte: str = "",
-    **prelude_kwargs,
-) -> str:
-    """llm_semdedup_trained[_k32|_scaled] oracle: the kmeans prelude
-    feeding its final centroid table into the llm_semdedup SQL in
-    place of the seeded centroid rows.  ``extra_cte`` prepends
-    data-dependent scalar CTEs (the _scaled variant's K/m) that the
-    ``prelude_kwargs`` overrides (src_pred / c0_sql / ids_pred) may
-    reference."""
-    dot = "CAST(list_sum([{a}.q[i] * {b}.q[i] for i in range(1, %d)]) AS DOUBLE)" % (
-        EMB_DIM + 1
-    )
-    cos = dot + " / sqrt(CAST({a}.n2 AS DOUBLE) * CAST({b}.n2 AS DOUBLE))"
-    return f"""
-WITH {extra_cte}{_kmeans_prelude(ids=ids, **prelude_kwargs)},
-cents AS (
-  SELECT cluster AS cell, c AS q,
-         CAST(list_sum([x * x for x in c]) AS BIGINT) AS n2
-  FROM kc{KMEANS_ITERS}
-),
-base AS (
-  SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS emb FROM embeddings
-),
-corpus AS (
-  SELECT vec_id, emb FROM base
-  UNION ALL
-  SELECT vec_id + 100000, emb FROM base WHERE vec_id < 10
-  UNION ALL
-  SELECT vec_id + 200000,
-         [CASE WHEN (i - 1) % 4 = 0 THEN emb[i] * 0.5 ELSE emb[i] END
-          for i in range(1, {EMB_DIM + 1})]
-  FROM base WHERE vec_id < 10
-),
-qs AS (SELECT vec_id, [CAST(floor(x * 1000) AS BIGINT) for x in emb] AS q FROM corpus),
-n AS (SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM qs),
-assigned AS (
-  SELECT vec_id, q, n2, cell AS cluster FROM (
-    SELECT a.vec_id, a.q, a.n2, c.cell,
-           row_number() OVER (
-             PARTITION BY a.vec_id
-             ORDER BY {cos.format(a='a', b='c')} DESC, c.cell ASC) AS rn
-    FROM n a CROSS JOIN (SELECT cell, q, n2 FROM cents) c)
-  WHERE rn = 1
-),
-dominated AS (
-  SELECT DISTINCT hi.vec_id
-  FROM assigned lo JOIN assigned hi
-    ON lo.cluster = hi.cluster AND lo.vec_id < hi.vec_id
-  WHERE {cos.format(a='lo', b='hi')} >= {SEMDEDUP_THRESHOLD}
-)
-SELECT a.vec_id, a.cluster, d.vec_id IS NULL AS kept
-FROM assigned a LEFT JOIN dominated d ON a.vec_id = d.vec_id
-ORDER BY a.vec_id
-"""
-
-
-def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained-codebook IVF ANN (round-4 verdict #3, sibling of
-    llm_semdedup_trained): the coarse quantizer is kmeans_train's
-    (cluster, c) output — the same 2 exact-integer Lloyd iterations
-    llm_kmeans certifies — instead of llm_ann_ivf's seeded member
-    rows. Identical plan shape: the K-row codebook broadcasts for
-    assignment and probing; the only shuffle stays the cell-id
-    candidate join. The oracle chains the kmeans prelude CTEs into
-    the IVF SQL — hash-exact end to end."""
-    from ..operators.kmeans import kmeans_train
-    from ..operators.similarity import ivf_topk
-
-    e = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans_train(e, "vec_id", "embedding", KMEANS_INIT_IDS, iters=KMEANS_ITERS)
-    return ivf_topk(
-        corpus=e,
-        queries=e.filter(F.col("vec_id") < N_QUERY_VECS),
-        id_col="vec_id",
-        vec_col="embedding",
-        query_id_col="vec_id",
-        centroids=cents,
-        centroid_id_col="cluster",
-        k=3,
-        n_probe=IVF_N_PROBE,
-        centroid_vec_col="c",
-        centroids_pre_quantized=True,
-    ).orderBy("query_id", "neighbor_id")
-
-
-def _ivf_trained_sql() -> str:
-    return f"""
-WITH {_kmeans_prelude()},
-q0 AS (
-  SELECT vec_id, {_IVF_QUANT} AS q FROM embeddings
-),
-n AS (
-  SELECT vec_id, q, CAST(list_sum([x * x for x in q]) AS BIGINT) AS n2 FROM q0
-),
-cents AS (
-  SELECT cluster AS cell, c AS kq,
-         CAST(list_sum([x * x for x in c]) AS BIGINT) AS kn2
-  FROM kc{KMEANS_ITERS}
-),
-assign0 AS (
-  SELECT a.vec_id, a.q, a.n2, c.cell,
-         {_IVF_DOT} / sqrt(CAST(a.n2 AS DOUBLE) * CAST(c.kn2 AS DOUBLE)) AS cos,
-         row_number() OVER (PARTITION BY a.vec_id
-                            ORDER BY {_IVF_DOT} / sqrt(CAST(a.n2 AS DOUBLE) * CAST(c.kn2 AS DOUBLE)) DESC,
-                                     c.cell ASC) AS rn
-  FROM n a CROSS JOIN cents c
-),
-cells AS (SELECT vec_id AS neighbor_id, q, n2, cell FROM assign0 WHERE rn = 1),
-probes AS (
-  SELECT vec_id AS query_id, q, n2, cell FROM assign0
-  WHERE rn <= {IVF_N_PROBE} AND vec_id < {N_QUERY_VECS}
-),
-scored AS (
-  SELECT p.query_id, c.neighbor_id,
-         CAST(list_sum([p.q[i] * c.q[i] for i in range(1, {EMB_DIM + 1})]) AS DOUBLE)
-           / sqrt(CAST(p.n2 AS DOUBLE) * CAST(c.n2 AS DOUBLE)) AS cos
-  FROM probes p JOIN cells c ON c.cell = p.cell AND c.neighbor_id != p.query_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id ASC) AS rn
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(floor(cos * 1e6) AS BIGINT) AS cos_micro
-FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id
-"""
-
-
-QUERIES["llm_semdedup"] = q_semdedup
-ORACLE_SQL["llm_semdedup"] = _semdedup_sql()
-QUERIES["llm_semdedup_trained"] = q_semdedup_trained
-ORACLE_SQL["llm_semdedup_trained"] = _semdedup_trained_sql()
-QUERIES["llm_semdedup_trained_k32"] = q_semdedup_trained_k32
-ORACLE_SQL["llm_semdedup_trained_k32"] = _semdedup_trained_sql(SEMDEDUP_K32_IDS)
-QUERIES["llm_semdedup_scaled"] = q_semdedup_scaled
-ORACLE_SQL["llm_semdedup_scaled"] = _semdedup_trained_sql(
-    extra_cte=(
-        # k = clamp(isqrt(N), floor, cap); m = train-sample stride
-        f"kdef AS (SELECT k, greatest(1, n // ({SEMDEDUP_TRAIN_PER_CENTROID} * k)) AS m "
-        f"FROM (SELECT count(*) AS n, greatest({SEMDEDUP_SCALED_FLOOR}, "
-        f"least(CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT), "
-        f"{SEMDEDUP_SCALED_CAP})) AS k FROM embeddings)),\n"
-    ),
-    src_pred="vec_id % (SELECT m FROM kdef) = 0",
-    c0_sql=(
-        "SELECT vid AS cluster, q AS c FROM ("
-        f"SELECT vid, q FROM kq WHERE vid >= {SEMDEDUP_SCALED_BASE} "
-        "ORDER BY vid LIMIT (SELECT k FROM kdef))"
-    ),
-)
-def q_ann_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained per-subspace PQ codebook (the third train-then-assign
-    composition, completing the set with llm_semdedup_trained and
-    llm_ann_ivf_trained): for each of the PQ_N_SUB subspaces,
-    kmeans_train runs the llm_kmeans Lloyd iterations over that
-    subspace's raw subvector slices seeded at PQ_CODEWORD_IDS, and
-    the union of the four trained (m, code, bq) tables replaces
-    llm_ann_pq's seeded codeword rows in pq_adc_topk. Slicing
-    commutes with elementwise quantization, so the trained
-    sub-centroids live in exactly the space the encoder measures
-    distances in. Same plan shape: the K*n_sub-row codebook
-    broadcasts for encode and LUT build; the corpus never shuffles
-    until the final per-query top-k."""
-    from functools import reduce
-
-    from ..operators.kmeans import kmeans_train
-
-    e = load_table(spark, sf_dir, "embeddings")
-    sub_dim = EMB_DIM // PQ_N_SUB
-    code_map = F.lit(None).cast("int")
-    for idx, cid in enumerate(PQ_CODEWORD_IDS):
-        code_map = F.when(F.col("cluster") == cid, idx).otherwise(code_map)
-    books = []
-    for m in range(PQ_N_SUB):
-        sub = e.select(
-            "vec_id", F.slice("embedding", sub_dim * m + 1, sub_dim).alias("embedding")
-        )
-        cents = kmeans_train(
-            sub, "vec_id", "embedding", PQ_CODEWORD_IDS, iters=KMEANS_ITERS
-        )
-        books.append(
-            cents.select(
-                F.lit(m).alias("m"), code_map.alias("code"), F.col("c").alias("bq")
-            )
-        )
-    book = reduce(lambda a, b: a.unionAll(b), books)
-    return pq_adc_topk(
-        corpus=e,
-        queries=e.filter(F.col("vec_id") < N_QUERY_VECS),
-        id_col="vec_id",
-        vec_col="embedding",
-        query_id_col="vec_id",
-        n_sub=PQ_N_SUB,
-        k=3,
-        codebook=book,
-    ).orderBy("query_id", "neighbor_id")
-
-
-def _pq_trained_sql() -> str:
-    sub_dim = EMB_DIM // PQ_N_SUB
-    case = " ".join(
-        f"WHEN {cid} THEN {idx}" for idx, cid in enumerate(PQ_CODEWORD_IDS)
-    )
-    d2 = f"list_sum([(s.sq[i] - b.bq[i]) * (s.sq[i] - b.bq[i]) for i in range(1, {sub_dim + 1})])"
-    preludes = ",\n".join(
-        _kmeans_prelude(
-            prefix=f"s{m}",
-            ids=list(PQ_CODEWORD_IDS),
-            dim=sub_dim,
-            vec_expr=f"embedding[{m * sub_dim + 1}:{(m + 1) * sub_dim}]",
-        )
-        for m in range(PQ_N_SUB)
-    )
-    book_union = "\n  UNION ALL\n".join(
-        f"  SELECT {m} AS m, CASE cluster {case} END AS code, c AS bq "
-        f"FROM s{m}c{KMEANS_ITERS}"
-        for m in range(PQ_N_SUB)
-    )
-    return f"""
-WITH {preludes},
-q0 AS (
-  SELECT vec_id, {_IVF_QUANT} AS q FROM embeddings
-),
-ms AS (SELECT unnest([{", ".join(str(m) for m in range(PQ_N_SUB))}]) AS m),
-subs AS (
-  SELECT vec_id, m, q[m * {sub_dim} + 1 : m * {sub_dim} + {sub_dim}] AS sq
-  FROM q0 CROSS JOIN ms
-),
-book AS (
-{book_union}
-),
-enc AS (
-  SELECT s.vec_id AS nid, s.m, b.code, {d2} AS d2
-  FROM subs s JOIN book b USING (m)
-),
-codes AS (
-  SELECT nid, m, code FROM (
-    SELECT *, row_number() OVER (PARTITION BY nid, m ORDER BY d2, code) AS rn FROM enc
-  ) WHERE rn = 1
-),
-lut AS (
-  SELECT s.vec_id AS query_id, s.m, b.code, {d2} AS d2
-  FROM subs s JOIN book b USING (m)
-  WHERE s.vec_id < {N_QUERY_VECS}
-),
-scored AS (
-  SELECT l.query_id, c.nid, CAST(sum(l.d2) AS BIGINT) AS adc_d2
-  FROM codes c JOIN lut l ON l.m = c.m AND l.code = c.code AND c.nid != l.query_id
-  GROUP BY 1, 2
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adc_d2, nid) AS rn
-  FROM scored
-)
-SELECT query_id, nid AS neighbor_id, adc_d2
-FROM ranked WHERE rn <= 3 ORDER BY query_id, neighbor_id
-"""
-
-
-QUERIES["llm_ann_ivf_trained"] = q_ann_ivf_trained
-ORACLE_SQL["llm_ann_ivf_trained"] = _ivf_trained_sql()
 CLUSTER_TOP_K = 3
 
 
@@ -1731,10 +1503,8 @@ def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf is one partial-agg groupBy; cluster-df derives FROM the tf
     table (vocabulary-sized, not corpus-sized); per-cluster top-k is
     a WindowGroupLimit over K partitions."""
-    from ..operators.kmeans import kmeans_assign, kmeans_train
-
     e = load_table(spark, sf_dir, "embeddings")
-    cents = kmeans_train(e, "vec_id", "embedding", KMEANS_INIT_IDS, iters=KMEANS_ITERS)
+    cents = kmeans_train(e, "vec_id", "embedding", KMEANS_INIT_IDS, KMEANS_ITERS)
     assigned = kmeans_assign(e, "vec_id", "embedding", cents)
     d = load_table(spark, sf_dir, "documents")
     docs = d.join(assigned, d["doc_id"] == assigned["vec_id"]).select(
@@ -1756,23 +1526,14 @@ def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_top_terms_sql() -> str:
-    d2 = (
-        f"CAST(list_sum([(a.q[i]-c.c[i])*(a.q[i]-c.c[i]) "
-        f"for i in range(1, {EMB_DIM + 1})]) AS BIGINT)"
-    )
+    final = KMEANS_ITERS + 1
     k_lit = len(KMEANS_INIT_IDS)
     return f"""
-WITH {_kmeans_prelude()},
-fa AS (
-  SELECT vid, cluster FROM (
-    SELECT *, row_number() OVER (PARTITION BY vid ORDER BY d2 ASC, cluster ASC) AS rn
-    FROM (SELECT a.vid, c.cluster, {d2} AS d2 FROM kq a CROSS JOIN kc{KMEANS_ITERS} c))
-  WHERE rn = 1
-),
+WITH {_kmeans_prelude(KMEANS_ITERS)},{_lloyd_assign("k", final, EMB_DIM)},
 docs AS (
   SELECT f.cluster,
          unnest(string_split(trim(regexp_replace(lower(d.text), '\\s+', ' ', 'g')), ' ')) AS tok
-  FROM documents d JOIN fa f ON f.vid = d.doc_id
+  FROM documents d JOIN ka{final} f ON f.vid = d.doc_id
 ),
 tf AS (SELECT cluster, tok, count(*) AS tf FROM docs GROUP BY 1, 2),
 dfc AS (SELECT tok, count(*) AS df_clusters FROM tf GROUP BY tok),
@@ -1791,8 +1552,6 @@ ORDER BY cluster, score_micro DESC, tok
 """
 
 
-QUERIES["llm_ann_pq_trained"] = q_ann_pq_trained
-ORACLE_SQL["llm_ann_pq_trained"] = _pq_trained_sql()
 # --- semantic train/eval decontamination -------------------------------------
 # llm_decontaminate catches VERBATIM leakage (13-gram membership);
 # this catches paraphrase-level leakage: an eval item whose embedding

@@ -117,6 +117,7 @@ def test_semdedup_keep_semantics(spark):
     of within-cluster near-dup groups."""
     from pyspark.sql import functions as F
 
+    from map_reduce_for_dbpl_dataset_spark.operators.kmeans import seed_centroids
     from map_reduce_for_dbpl_dataset_spark.operators.similarity import semdedup
 
     rows = [
@@ -129,9 +130,10 @@ def test_semdedup_keep_semantics(spark):
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>").select(
         "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
     )
+    cents = seed_centroids(corpus, "vec_id", "embedding", [0, 1])
     out = {
         r["vec_id"]: (r["cluster"], r["kept"])
-        for r in semdedup(corpus, "vec_id", "embedding", [0, 1], threshold=0.95).collect()
+        for r in semdedup(corpus, "vec_id", "embedding", cents, threshold=0.95).collect()
     }
     assert out[0] == (0, True)
     assert out[1] == (1, True)
@@ -438,7 +440,7 @@ def test_semdedup_matmul_assignment_matches_expression_argmax(spark, sf_dir):
     )
 
     got = {
-        r["_id"]: r["cluster"] for r in _semdedup_assigned(c, cc).collect()
+        r["_id"]: r["cluster"] for r in _semdedup_assigned(c, cents).collect()
     }
 
     scored = c.join(F.broadcast(cc)).withColumn(

@@ -26,10 +26,11 @@ import hashlib
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 FIXTURE_TABLES = (
     "region", "nation", "customer", "supplier", "part",

@@ -29,11 +29,13 @@ def _jaccard_prefix_operator(spark, sf_dir):
 def _semdedup_pairstage(spark, sf_dir):
     """The whole semdedup operator (salted within-cluster pair join
     plus labeling) on the K=4 seeded demonstrator codebook."""
+    from map_reduce_for_dbpl_dataset_spark.operators.kmeans import seed_centroids
     from map_reduce_for_dbpl_dataset_spark.operators.similarity import semdedup
     from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
-    return semdedup(e, "vec_id", "embedding", centroid_ids=[30, 31, 32, 33])
+    cents = seed_centroids(e, "vec_id", "embedding", [30, 31, 32, 33])
+    return semdedup(e, "vec_id", "embedding", cents)
 
 
 SPECIAL = {

@@ -886,23 +886,21 @@ quality scores (a selected-count band would jump by the tie mass) —
 and only the deterministic verdict plus the exact-threshold counts
 are hash-compared.""",
     "llm_semdedup_trained": """\
-**Train-then-assign composition** (round-4 verdict #3): kmeans_train
-(operators/kmeans.py — the same 2 exact-integer Lloyd iterations
-llm_kmeans certifies) produces the coarse codebook, and its
-(cluster, c) output replaces llm_semdedup's seeded-by-id centroid
-rows. Plan shape is unchanged — the K-row codebook broadcasts for
-both the training assignments and the final cell assignment; the
-corpus never shuffles to assign — and the oracle unrolls the
-training iterations as CTEs feeding the semdedup SQL, so the
-composition is hash-exact end to end. This closes the 'production
-trains them' caveat on the seeded SemDeDup/IVF codebooks with a
-live demonstration.
+**Train-then-assign composition**: kmeans_train (operators/kmeans.py
+— the same 2 exact-integer Lloyd iterations llm_kmeans certifies)
+produces the (cluster, c) codebook; llm_semdedup is the same query at
+zero iterations, whose codebook is the seed rows. Plan shape is
+the same for both — the K-row codebook broadcasts for the training
+assignments and the final cell assignment; the corpus never shuffles
+to assign — and the oracle unrolls the training iterations as CTEs
+feeding the semdedup SQL, so the composition is hash-exact end to
+end.
 
-**SemDeDup scaling law, measured at the sf1 scale point** (round-5
-bench investigation): within-cluster pair work is sum-cluster^2, so
-the centroid count must scale with the corpus (the SemDeDup paper
-trains ~110k centroids for LAION). Freezing K=4 while the corpus
-10xed cost ~100x pair work — 154 s at sf1 vs 6.9 s at sf0.1. Three
+**SemDeDup scaling law, measured at the sf1 scale point**:
+within-cluster pair work is sum-cluster^2, so the centroid count must
+scale with the corpus (the SemDeDup paper trains ~110k centroids for
+LAION). Freezing K=4 while the corpus 10xed cost ~100x pair work —
+154 s at sf1 vs 6.9 s at sf0.1. Three
 fixes, all semantics-preserving (oracles still hash-exact): (1)
 per-iteration centroid checkpoints + a pinned training corpus (the
 trained-centroid DAG was re-executed by each of the three downstream
@@ -916,9 +914,9 @@ spreads each cluster's pairs over (cluster, salt) keys. With K=32
 bench times) sf1 lands at ~9 s; the K=4 oracle demonstrator drops
 154 s -> ~31 s from the same fixes.
 
-**Round-6 follow-ups, measured at sf1**: (4) cell assignment became
-ONE Arrow-batched numpy matmul per batch (mapInPandas, codebook in
-the task closure) — the JVM higher-order-function dot products are
+**Assignment and pair-join follow-ups, measured at sf1**: (4) cell
+assignment became ONE Arrow-batched numpy matmul per batch
+(mapInPandas, codebook in the task closure) — the JVM higher-order-function dot products are
 interpreted per element and cost ~160 us per scored row, linear in
 K (14 s for K=141); the matmul form is 0.6 s, bit-identical
 (int64 dots exact, float64 cosine uses the same IEEE ops). (5) the
@@ -930,9 +928,8 @@ pair fan-out onto the probe side's few input partitions (measured
 computed-K llm_semdedup_scaled (K=141, sampled training) ~4.9 s —
 the scaling rule now BEATS the hand-picked point, as it should.""",
     "llm_semdedup_scaled": """\
-**The scaling law as code** (round-5 verdict #4): K =
-clamp(isqrt(N), 8, 256) computed from the corpus count, codebook
-TRAINED on a bounded deterministic sample (~20 rows per centroid,
+**The scaling law as code**: K = clamp(isqrt(N), 8, 256) computed
+from the corpus count, codebook TRAINED on a bounded deterministic sample (~20 rows per centroid,
 vec_id % m == 0 with m = N div (20K)) so the training pass is
 corpus-size-independent, then the standard full-corpus broadcast
 assignment + salted pair stage. The oracle computes the same K and
@@ -941,13 +938,13 @@ sample — one static string, hash-exact at sf0.01/sf0.1/sf1 (K = 22
 / 44 / 141). sf1 lands ~4.9 s vs the hand-picked k32 slot's
 ~6.7 s.""",
     "llm_ann_ivf_trained": """\
-**Trained coarse quantizer** (sibling of llm_semdedup_trained): the
-IVF codebook comes from kmeans_train instead of seeded member rows.
-ivf_topk accepts the already-quantized (cluster, c) table via
-centroid_vec_col/centroids_pre_quantized; plan shape is the seeded
-variant's — codebook broadcasts for assignment and probing, the only
-shuffle is the cell-id candidate join. Oracle = kmeans prelude CTEs
-chained into the IVF SQL, hash-exact.""",
+**Trained coarse quantizer** (sibling of llm_semdedup_trained):
+ivf_topk takes the quantized (cluster, c) codebook from kmeans_train;
+llm_ann_ivf is the same query at zero iterations from its own seeds.
+Plan shape is the seeded variant's — codebook broadcasts for
+assignment and probing, the only shuffle is the cell-id candidate
+join. Oracle = kmeans prelude CTEs chained into the IVF SQL,
+hash-exact.""",
     "llm_bigram_lm_score": """\
 **8-byte shuffle keys + one corpus pass** (round-6, was the round-5
 weak-watch item): the explode output collapses immediately to h_bg =
@@ -967,15 +964,15 @@ self-join-back shape (it would to a cross-corpus lookup). sf1 lands
 at 8.2 s, within ~2x of the bare tokenize+explode floor (4.1 s) —
 the pass is text-scan-bound, the right regime for corpus scoring.""",
     "llm_ann_pq_trained": """\
-**Per-subspace trained PQ codebook** (completes the train-then-assign
-set): kmeans_train runs once per subspace over raw subvector slices
+**Per-subspace trained PQ codebook**: pq_codebook (operators/kmeans.py)
+runs kmeans_train once per subspace over raw subvector slices
 (slicing commutes with elementwise quantization, so the trained
-sub-centroids live in the encoder's distance space), and the union of
-the four (m, code, bq) tables replaces the seeded codeword rows in
-pq_adc_topk. The oracle chains four s{m}-prefixed kmeans preludes
-into the PQ SQL — hash-exact. With this, none of the
-SemDeDup/IVF/PQ codebooks is seeded-only anymore; every 'production
-trains them' docstring has a live trained twin.""",
+sub-centroids live in the encoder's distance space) and stacks the
+four tables as the (m, code, bq) codebook pq_adc_topk takes;
+llm_ann_pq is the same query at zero iterations. Same plan shape:
+the K*n_sub-row codebook broadcasts for encode and LUT build. The
+oracle chains four s{m}-prefixed kmeans preludes into the PQ SQL —
+hash-exact.""",
 }
 
 
@@ -996,23 +993,17 @@ def _kmeans_iteration_plan(spark, sf_dir):
     """Pre-checkpoint Lloyd iteration (assignment + centroid update):
     the subtree hidden behind kmeans_train's per-iteration eager
     checkpoint."""
-    from pyspark.sql import functions as F
-
-    from map_reduce_for_dbpl_dataset_spark.functions.vectors import quantize
     from map_reduce_for_dbpl_dataset_spark.operators.kmeans import (
         _assign,
+        _quantized,
         _update_centroids,
+        seed_centroids,
     )
     from map_reduce_for_dbpl_dataset_spark.sources.parquet import load_table
 
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.select(
-        F.col("vec_id").alias("vid"), quantize(F.col("embedding"), 1000).alias("q")
-    )
-    cents = q.filter(F.col("vid").isin([30, 31, 32, 33])).select(
-        F.col("vid").alias("cluster"), F.col("q").alias("c")
-    )
-    return _update_centroids(_assign(q, cents))
+    cents = seed_centroids(e, "vec_id", "embedding", [30, 31, 32, 33])
+    return _update_centroids(_assign(_quantized(e, "vec_id", "embedding", 1000), cents))
 
 
 def _bigram_db_plan(spark, sf_dir):
@@ -1077,8 +1068,7 @@ def _cc_star_round_plan(spark, sf_dir):
 def _semdedup_assign_plan(spark, sf_dir):
     """Pre-checkpoint SemDeDup cell assignment: the subtree hidden
     behind semdedup's lazy lineage cut."""
-    from pyspark.sql import functions as F
-
+    from map_reduce_for_dbpl_dataset_spark.operators.kmeans import seed_centroids
     from map_reduce_for_dbpl_dataset_spark.operators.similarity import (
         _semdedup_assigned,
         _semdedup_corpus,
@@ -1087,11 +1077,7 @@ def _semdedup_assign_plan(spark, sf_dir):
 
     e = load_table(spark, sf_dir, "embeddings")
     c = _semdedup_corpus(e, "vec_id", "embedding", 1000)
-    cents = c.filter(F.col("_id").isin([30, 31, 32, 33])).select(
-        F.col("_id").alias("_cell"),
-        F.col("_q").alias("_kq"),
-        F.col("_n2").alias("_kn2"),
-    )
+    cents = seed_centroids(e, "vec_id", "embedding", [30, 31, 32, 33])
     return _semdedup_assigned(c, cents)
 
 
