@@ -1,7 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Used by tests and bench.py; the driver supplies its own session to
-``__spark_entry__.entry``/``queries`` so query code never builds one.
+Used by the tests, bench.py, perfbench/run.py and the tools (check.py,
+plan_audit.py, dump_plans.py, scale_probe.py); the driver supplies its
+own session to ``__spark_entry__.entry``/``queries`` so query code never
+builds one.
 
 Scale notes (100 TB design target):
 - AQE on: runtime coalescing of small shuffle partitions, skew-join
@@ -9,6 +11,15 @@ Scale notes (100 TB design target):
 - shuffle.partitions sized to cores locally; on a real cluster this
   is a starting hint only — AQE re-plans from map output statistics.
 - Arrow enabled for the (few) Pandas-UDF paths (multimodal decode).
+- Generated-code cache sized to the registry's working set
+  (``CODEGEN_CACHE_ENTRIES``). Spark's LRU cache of compiled classes
+  holds 100 by default. One warm pass of the relational benchmark
+  workload uses 171 classes and one of llm_dedup 262, so at 100 each
+  class is evicted before its next use, every lookup misses, and every
+  rerun of a query compiled all of its code again with Janino. The
+  whole registry (149 queries at sf0.01) is 1,601 distinct classes, so
+  at 4096 a rerun finds every class it compiled before
+  (tests/test_codegen_cache.py).
 """
 
 from __future__ import annotations
@@ -20,6 +31,12 @@ import zipfile
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[str] = set()
+
+# Entries in Spark's LRU cache of compiled generated classes (default
+# 100). Measured: one session running all 149 registry queries at
+# sf0.01 compiles 1,601 distinct classes (1,915 with stage ids in class
+# names). This is the next power of two above twice that.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -83,14 +100,19 @@ def get_spark(
         # dblp_coauthor_components_star's labeling join plans
         # ShuffledHashJoin (tools/plan_audit.py).  tpch_revenue_by_
         # nation's lineitem ⋈ orders still plans SortMergeJoin at the
-        # bench SFs (plans/r22/tpch_revenue_by_nation_*_c32_before.txt
-        # — the muchSmaller guard fails there), so no SHJ speedup is
-        # claimed for it.  Bucketed joins unaffected (still SMJ over
-        # bucketed scans, no exchange).
+        # bench SFs (the muchSmaller guard fails there), so no SHJ
+        # speedup is claimed for it.  Bucketed joins unaffected (still
+        # SMJ over bucketed scans, no exchange).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # AQE numbers whole-stage codegen stages as it creates query
+        # stages, in the order their inputs finish, so the numbers of
+        # one plan vary from run to run.  With the number in the class
+        # name, a rerun's stage is a new source and a cache miss.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .getOrCreate()
     )

@@ -114,8 +114,12 @@ def stream_events_phased_late(
     shutil.rmtree(stage, ignore_errors=True)
     os.makedirs(stage)
     min_ts, max_ts = batch.agg(F.min("ts"), F.max("ts")).collect()[0]
+    # top-1 by event_id, not a bare limit: the pick is deterministic, and
+    # a limit's generated code names its counter from a JVM-wide
+    # sequence, so every run of it compiled new code
     carrier = (
         batch.filter(F.col("ts") == max_ts)
+        .orderBy("event_id")
         .limit(1)
         .withColumn("event_id", F.col("event_id") + 20_000_000)
     )
